@@ -812,7 +812,7 @@ object SparkEntry {
       val model = IvfIndex.train(feats, IvfIndex.scaledNlist(feats.count()),
         iters = 2)
       val dir = WorkDirs.dir(s"ivf_media_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      IvfIndex.writeIndex(feats, model, dir)
+      IvfIndex.writeIndex(IvfIndex.FloatCodec, feats, model, dir)
       (model, dir)
     })
 
@@ -849,7 +849,7 @@ object SparkEntry {
     val (model, dir) = mediaIndex(spark, sfDir)
     operators.ServingProbe.decide(s"media:$sfDir", model.nlist, targetMicro) {
       val feats = mediaFeats(spark, sfDir)
-      IvfIndex.probeCurve(spark, dir, feats,
+      IvfIndex.probeCurve(IvfIndex.FloatCodec, spark, dir, feats,
         feats.filter(col("vec_id") < 5), model, k = 20)
     }
   }
@@ -868,8 +868,9 @@ object SparkEntry {
   private def mediaIndexSearch(spark: SparkSession, sfDir: String,
       pred: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val (model, dir) = mediaIndex(spark, sfDir)
-    IvfIndex.searchIndex(spark, dir, mediaQueryFeats(spark, sfDir, pred),
-      model, k, nprobe = mediaServingNprobe(spark, sfDir))
+    IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir,
+      mediaQueryFeats(spark, sfDir, pred), model, k,
+      nprobe = mediaServingNprobe(spark, sfDir))
   }
 
   /** Media features piped into ANN search — SERVED FROM THE MEDIA IVF
@@ -997,23 +998,17 @@ object SparkEntry {
     // the three probe legs are independent Dataset constructions — built
     // concurrently like AnnRecall's 13 tiers (round 19, guide §2.6); the
     // assembled union (and result) is identical to the sequential build's
-    val legBuilders: Seq[() => DataFrame] = Seq(
-      () => leg("hybrid_sem",
+    val legBuilders: Seq[(String, () => DataFrame)] = Seq(
+      "hybrid_sem" -> (() => leg("hybrid_sem",
         IvfIndex.packSearch(spark, sfDir, col("vec_id") === 0L, k = 20),
-        truthE),
-      () => leg("media_sem",
+        truthE)),
+      "media_sem" -> (() => leg("media_sem",
         mediaIndexSearch(spark, sfDir, col("media_id") === 0L, k = 20),
-        mediaTruth((q, _) => q == 0L)),
-      () => leg("media_ann",
+        mediaTruth((q, _) => q == 0L))),
+      "media_ann" -> (() => leg("media_ann",
         mediaAnnQuery(spark, sfDir),
-        mediaTruth((_, r) => r <= 10L)))
-    val legs = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.traverse(legBuilders)(b => Future(b())), Duration.Inf)
-    }
-    legs.reduce(_ unionAll _)
+        mediaTruth((_, r) => r <= 10L))))
+    operators.ConcurrentBuild(legBuilders).reduce(_ unionAll _)
   }
 
   /** Composite-rowkey cell table (HBase multi-component keys): lineitem's

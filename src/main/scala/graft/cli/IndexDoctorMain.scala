@@ -43,7 +43,7 @@ object IndexDoctorMain {
     val nCells = r.getAs[Long]("n_cells")
     if (rebuild) {
       val nlist = p.long("nlist", default = nCells).toInt
-      IvfIndex.rebuildIndex(spark, indexDir, nlist,
+      IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, indexDir, nlist,
         iters = p.long("iters", default = 3L).toInt)
     }
     // quarantined slices are preserved race evidence (refuse-GC renamed

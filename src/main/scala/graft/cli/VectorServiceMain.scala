@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.operators.{IvfBqIndex, IvfIndex, IvfPqIndex, ModelStore}
+import graft.operators.{IvfCodec, IvfIndex, ModelStore}
 import graft.streaming.{DeltaLayout, StreamAnnServe, VectorIngest}
 import graft.streaming.VectorService
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,8 +18,8 @@ import org.apache.spark.sql.streaming.Trigger
  * `--layout float|pq|bq` selects the index kind (round 18: before this
  * only the float layout could cross a process boundary — the composed
  * tiers had rebuild + coordinatedSwap but no persisted model, so they
- * were inoperable from flags): every layout persists its model next to
- * the index ([[ModelStore]] — float-bit exact, so the fingerprint
+ * were inoperable from flags): every layout is one [[IvfCodec]], whose
+ * model persists next to the index (float-bit exact, so the fingerprint
  * survives the round-trip), separate CLI invocations re-load the
  * artifact, and the layout stamp rejects a stale one loudly — the
  * coordination contract across PROCESSES, enforced the same way it is
@@ -78,12 +78,19 @@ object VectorServiceMain {
 
   def run(spark: SparkSession, args: Array[String]): Map[String, String] = {
     val p = Args.parse(args, Known, Usage)
+    val layout = p.get("layout").getOrElse("float")
+    runWith(spark, p, IvfCodec.byName.getOrElse(layout,
+      Args.die(s"unknown layout: $layout", Usage)))
+  }
+
+  /** Every action over the one `--layout` codec: the index lifecycle is
+    * written once in [[IvfIndex]], so only the codec differs. */
+  private def runWith[M](spark: SparkSession, p: Args.Parsed,
+      codec: IvfCodec[M]): Map[String, String] = {
     val action = p.required("action", Usage)
     val indexDir = p.required("indexDir", Usage)
     val modelDir = p.required("modelDir", Usage)
-    val layout = p.get("layout").getOrElse("float")
-    if (!Set("float", "pq", "bq").contains(layout))
-      Args.die(s"unknown layout: $layout", Usage)
+    val layout = codec.name
     def input = p.required("input", Usage)
     def checkpoint = p.required("checkpoint", Usage)
     // --corpus is WITNESS-BOUND to the artifact (ModelStore): a wrong
@@ -112,60 +119,26 @@ object VectorServiceMain {
         val corpus = spark.read.parquet(input).select("vec_id", "embedding")
         val n = corpus.count()
         val nlist = p.long("nlist", IvfIndex.scaledNlist(n).toLong).toInt
-        val queries = corpus.orderBy("vec_id").limit(5)
-        val (fp, np) = layout match {
-          case "float" =>
-            val m = IvfIndex.train(corpus, nlist, itersArg)
-            IvfIndex.writeIndex(corpus, m, indexDir)
-            ModelStore.saveIvfModel(spark, m, modelDir)
-            (m.fingerprint, measureAndSaveServing(spark, modelDir, nlist,
-              targetMicro)(
-              IvfIndex.probeCurve(spark, indexDir, corpus, queries, m, 20)))
-          case "bq" =>
-            val coarse = IvfIndex.train(corpus, nlist, itersArg)
-            IvfBqIndex.writeIndex(corpus, coarse, indexDir)
-            ModelStore.saveIvfBqModel(spark, coarse, modelDir)
-            (IvfBqIndex.fingerprintOf(coarse),
-              measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
-                IvfBqIndex.probeCurve(spark, indexDir, corpus, queries,
-                  coarse, 20, n)))
-          case "pq" =>
-            val m = IvfPqIndex.train(corpus, nlist,
-              coarseIters = itersArg, pqIters = itersArg)
-            IvfPqIndex.writeIndex(corpus, m, indexDir)
-            ModelStore.saveIvfPqModel(spark, m, modelDir)
-            (m.fingerprint,
-              measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
-                IvfPqIndex.probeCurve(spark, indexDir, corpus, queries,
-                  m, 20, n)))
-        }
+        val m = codec.train(corpus, nlist, itersArg)
+        IvfIndex.writeIndex(codec, corpus, m, indexDir)
+        codec.save(spark, m, modelDir)
+        val np = measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
+          IvfIndex.probeCurve(codec, spark, indexDir, corpus,
+            corpus.orderBy("vec_id").limit(5), m, 20))
         DeltaLayout.writeMarker(spark, s"$modelDir/$KindFile", layout)
         // bind future --corpus flags to THIS build's float rows
         ModelStore.saveCorpusWitness(spark, corpus, modelDir)
         Seq("N_VECTORS" -> n.toString, "NLIST" -> nlist.toString,
           "LAYOUT" -> layout,
           "SERVING_NPROBE" -> np.toString,
-          "FINGERPRINT" -> fp)
+          "FINGERPRINT" -> codec.fingerprint(m))
 
       case "ingest" =>
         requireKind()
         val delta = spark.readStream
           .schema(spark.read.parquet(input).schema).parquet(input)
-        val q = layout match {
-          case "float" =>
-            VectorIngest.start(delta, ModelStore.loadIvfModel(spark, modelDir),
-              indexDir, checkpoint, trigger = Trigger.AvailableNow())
-          case "bq" =>
-            val coarse = ModelStore.loadIvfBqModel(spark, modelDir)
-            VectorIngest.startWith(delta, indexDir, checkpoint,
-              Trigger.AvailableNow())((batch, sliceId) =>
-              { IvfBqIndex.appendToIndex(batch, coarse, indexDir, sliceId); () })
-          case "pq" =>
-            val m = ModelStore.loadIvfPqModel(spark, modelDir)
-            VectorIngest.startWith(delta, indexDir, checkpoint,
-              Trigger.AvailableNow())((batch, sliceId) =>
-              { IvfPqIndex.appendToIndex(batch, m, indexDir, sliceId); () })
-        }
+        val q = VectorIngest.start(delta, codec, codec.load(spark, modelDir),
+          indexDir, checkpoint, trigger = Trigger.AvailableNow())
         try q.awaitTermination() finally q.stop()
         val total = IvfIndex.cellStats(spark, indexDir)
           .agg(sum(col("n_vectors"))).head().getLong(0)
@@ -180,36 +153,18 @@ object VectorServiceMain {
         // probe precedence: explicit flag > the artifact's MEASURED
         // decision (shipped by build/rebuild) > the √nlist heuristic
         // (legacy artifacts without a serving row)
-        def nprobeFor(nlist: Int) = p.get("nprobe").map(_.toInt)
+        val m = codec.load(spark, modelDir)
+        val nlist = codec.coarse(m).nlist
+        val np = p.get("nprobe").map(_.toInt)
           .orElse(ModelStore.loadServingProbe(spark, modelDir))
           .getOrElse(IvfIndex.scaledNprobe(nlist))
-        val q = layout match {
-          case "float" =>
-            val m = ModelStore.loadIvfModel(spark, modelDir)
-            StreamAnnServe.start(queries, m, indexDir, outDir, checkpoint,
-              k = k, nprobe = nprobeFor(m.nlist),
-              trigger = Trigger.AvailableNow())
-          case "bq" =>
-            val coarse = ModelStore.loadIvfBqModel(spark, modelDir)
-            val corpus = corpusDf
-            val n = corpus.count()
-            val np = nprobeFor(coarse.nlist)
-            StreamAnnServe.startWith(queries, outDir, checkpoint,
-              Trigger.AvailableNow())(batch =>
-              IvfBqIndex.searchIndex(spark, indexDir, corpus, batch, coarse,
-                k, np, r = math.max(k,
-                  IvfBqIndex.scaledProbedPool(n, coarse.nlist, np))))
-          case "pq" =>
-            val m = ModelStore.loadIvfPqModel(spark, modelDir)
-            val corpus = corpusDf
-            val n = corpus.count()
-            val np = nprobeFor(m.coarse.nlist)
-            StreamAnnServe.startWith(queries, outDir, checkpoint,
-              Trigger.AvailableNow())(batch =>
-              IvfPqIndex.searchIndex(spark, indexDir, corpus, batch, m,
-                k, np, r = math.max(k,
-                  IvfBqIndex.scaledProbedPool(n, m.coarse.nlist, np))))
-        }
+        // code layouts rerank from --corpus at the probed-mass pool
+        lazy val corpus = corpusDf
+        val q = StreamAnnServe.start(queries, codec, m, indexDir, outDir,
+          checkpoint, k = k, nprobe = np,
+          rerank = IvfIndex.rerankFor(codec, corpus, corpus.count(), k,
+            nlist, np),
+          trigger = Trigger.AvailableNow())
         try q.awaitTermination() finally q.stop()
         Seq("N_ANSWERS" ->
           StreamAnnServe.results(spark, outDir).count().toString)
@@ -253,47 +208,25 @@ object VectorServiceMain {
         val total = IvfIndex.cellStats(spark, indexDir)
           .agg(sum(col("n_vectors"))).head().getLong(0)
         val nlist = p.long("nlist", IvfIndex.scaledNlist(total).toLong).toInt
-        val (fp, np) = layout match {
-          case "float" =>
-            val m2 = IvfIndex.rebuildIndex(spark, indexDir, nlist, itersArg)
-            ModelStore.saveIvfModel(spark, m2, modelDir)
-            // the layout changed → the old measured decision is stale;
-            // re-measure over the rebuilt layout and re-ship it
-            val contents = IvfIndex.readIndex(spark, indexDir)
-              .select("vec_id", "embedding")
-            (m2.fingerprint,
-              measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
-                IvfIndex.probeCurve(spark, indexDir, contents,
-                  contents.orderBy("vec_id").limit(5), m2, 20)))
-          case "bq" =>
-            // the code layout carries no floats: retrain from --corpus
-            // (the table the index was built from)
-            val corpus = corpusDf
-            val coarse2 = IvfBqIndex.rebuildIndex(spark, indexDir, corpus,
-              nlist, itersArg)
-            ModelStore.saveIvfBqModel(spark, coarse2, modelDir)
-            ModelStore.saveCorpusWitness(spark, corpus, modelDir)
-            (IvfBqIndex.fingerprintOf(coarse2),
-              measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
-                IvfBqIndex.probeCurve(spark, indexDir, corpus,
-                  corpus.orderBy("vec_id").limit(5), coarse2, 20,
-                  corpus.count())))
-          case "pq" =>
-            val corpus = corpusDf
-            val m2 = IvfPqIndex.rebuildIndex(spark, indexDir, corpus, nlist,
-              coarseIters = itersArg, pqIters = itersArg)
-            ModelStore.saveIvfPqModel(spark, m2, modelDir)
-            ModelStore.saveCorpusWitness(spark, corpus, modelDir)
-            (m2.fingerprint,
-              measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
-                IvfPqIndex.probeCurve(spark, indexDir, corpus,
-                  corpus.orderBy("vec_id").limit(5), m2, 20, corpus.count())))
-        }
+        // a code layout carries no floats: it retrains from --corpus (the
+        // table the index was built from), the float layout from itself
+        val corpus = if (codec.storesVectors) None else Some(corpusDf)
+        val m2 = IvfIndex.rebuildIndex(codec, spark, indexDir, nlist,
+          itersArg, corpus)
+        codec.save(spark, m2, modelDir)
+        corpus.foreach(ModelStore.saveCorpusWitness(spark, _, modelDir))
+        // the layout changed → the old measured decision is stale;
+        // re-measure over the rebuilt layout and re-ship it
+        val contents = corpus.getOrElse(
+          IvfIndex.readIndex(spark, indexDir).select("vec_id", "embedding"))
+        val np = measureAndSaveServing(spark, modelDir, nlist, targetMicro)(
+          IvfIndex.probeCurve(codec, spark, indexDir, contents,
+            contents.orderBy("vec_id").limit(5), m2, 20))
         DeltaLayout.writeMarker(spark, s"$modelDir/$KindFile", layout)
         Seq("NLIST" -> nlist.toString,
           "LAYOUT" -> layout,
           "SERVING_NPROBE" -> np.toString,
-          "FINGERPRINT" -> fp,
+          "FINGERPRINT" -> codec.fingerprint(m2),
           "REBUILT" -> "true")
 
       case "compact" =>

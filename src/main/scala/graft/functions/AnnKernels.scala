@@ -52,6 +52,14 @@ object AnnKernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** How many components of the subvector at `off` a vector of `n`
+    * elements actually holds: a short vector's trailing subspaces are
+    * partial or empty, exactly as the `slice` of the reference forms
+    * yields them (and dot products stop at the shorter side, like
+    * [[VectorOps.dot]]) — never a read past the array's end. */
+  private def held(n: Int, off: Int, subDim: Int): Int =
+    math.max(0, math.min(subDim, n - off))
+
   /** Per-subspace nearest-codeword ids (argmax of dot − ½|c|², ties →
     * lowest code) — [[graft.operators.PqIndex]] `codesColumn`. */
   def pqEncode(v: ArrayData, books: Array[Array[Array[Float]]],
@@ -64,6 +72,7 @@ object AnnKernels {
       val half = halves(s)
       val subDim = book(0).length
       val off = s * subDim
+      val len = held(v.numElements(), off, subDim)
       var bestScore = 0.0
       var bestJ = 0
       var j = 0
@@ -71,7 +80,7 @@ object AnnKernels {
         val cw = book(j)
         var d = 0.0
         var i = 0
-        while (i < subDim) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
+        while (i < len) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
         val score = d - half(j)
         if (j == 0 || score > bestScore) { bestScore = score; bestJ = j }
         j += 1
@@ -93,13 +102,14 @@ object AnnKernels {
       val book = books(s)
       val subDim = book(0).length
       val off = s * subDim
+      val len = held(v.numElements(), off, subDim)
       val row = new Array[Double](book.length)
       var j = 0
       while (j < book.length) {
         val cw = book(j)
         var d = 0.0
         var i = 0
-        while (i < subDim) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
+        while (i < len) { d += v.getFloat(off + i).toDouble * cw(i).toDouble; i += 1 }
         row(j) = d
         j += 1
       }
@@ -111,8 +121,10 @@ object AnnKernels {
 
   /** ADC score: left fold from 0.0 of tables(i)(codes(i)) in ascending i —
     * the pinned add order of the `aggregate(zip_with(...))` form. Returns
-    * null exactly where that form did (length mismatch, null element,
-    * out-of-range code). */
+    * null on a length mismatch, a null element, or a code outside
+    * [0, k) — a negative code included. That is the kernel's own
+    * definition, not the old form's: `element_at` throws on index 0 and
+    * counts from the end below it, so the two agree on valid codes only. */
   def adcScore(codes: ArrayData, tables: ArrayData): java.lang.Double = {
     val nc = codes.numElements()
     val nt = tables.numElements()

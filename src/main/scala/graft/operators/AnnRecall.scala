@@ -167,15 +167,8 @@ object AnnRecall {
       "ivfpq"      -> (() => IvfPqIndex.ivfpqQuery(spark, sfDir)),
       "ivfpq_res"  -> (() => IvfPqIndex.ivfpqResidualQuery(spark, sfDir)),
       "sq8"        -> (() => SqIndex.sqQuery(spark, sfDir)))
-    val tierDf: Map[String, DataFrame] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.traverse(tierBuilders) { case (name, build) =>
-          Future((name, build()))
-        }, Duration.Inf).toMap
-    }
+    val tierDf: Map[String, DataFrame] = tierBuilders.map(_._1)
+      .zip(ConcurrentBuild(tierBuilders)).toMap
     Tiers.map { case (tier, k, floorMicro) =>
       val rows = if (tier == "ivf_filtered") filteredTruth else truth(k)
       // the denominator is the truth set's OWN size — and the truth set

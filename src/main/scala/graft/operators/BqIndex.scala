@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -51,10 +50,6 @@ object BqIndex {
   private[graft] def hammingSim(a: Column, b: Column, dim: Int = 64): Column =
     lit(dim) - bit_count(a.bitwiseXOR(b))
 
-  /** Test seam for the integer kernel. */
-  private[graft] def hammingSimForTest(a: Column, b: Column): Column =
-    hammingSim(a, b)
-
   /** (vec_id, code) — one BIGINT per vector. */
   def encode(corpus: DataFrame): DataFrame =
     corpus.select(col("vec_id"), codeColumn(col("embedding")).as("code"))
@@ -63,13 +58,11 @@ object BqIndex {
   def searchHamming(encoded: DataFrame, queries: DataFrame, r: Int): DataFrame = {
     val q = encode(queries).select(col("vec_id").as("query_id"),
       col("code").as("qcode"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("ham").desc, col("vec_id").asc)
-    encoded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        hammingSim(col("code"), col("qcode")).as("ham"))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= r)
+    Similarity.topPerQuery(
+      encoded.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          hammingSim(col("code"), col("qcode")).as("ham")),
+      r, col("ham").desc)
   }
 
   /** Hamming candidates + exact cosine rerank — the standard recall
@@ -79,7 +72,7 @@ object BqIndex {
     require(r >= k, "rerank pool must be at least k")
     val cands = searchHamming(encode(corpus), queries, r)
       .select(col("query_id"), col("vec_id"))
-    PqIndex.rerankExact(cands, corpus, queries, k)
+    Similarity.rerankExact(cands, corpus, queries, k)
   }
 
   /** Query-pack adapter — first 5 queries, k = 10, rerank pool

@@ -211,7 +211,6 @@ object EmbeddingPca {
     "this form survives as the spec equivalence reference", "round 16")
   def pcaTopK(corpus: DataFrame, queries: DataFrame, model: Model,
       nComp: Int = NComponents, r: Int = 100, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val comps = (0 until nComp).map(c => model.components(c).map(_.toFloat))
     def coords(e: Column): Column =
       array(comps.map(w => rawCoord(e, w)): _*)
@@ -226,17 +225,12 @@ object EmbeddingPca {
     val scored = cor.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("embedding"),
         col("query_vec"), Similarity.q9(dist).as("pca_dist"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("pca_dist").asc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= r)
+    val pre = Similarity.topPerQuery(scored, r, col("pca_dist").asc,
+        cut = true)
       .select(col("query_id"), col("vec_id"), col("pca_dist"),
         Similarity.q9(graft.functions.VectorFunctions.cosine_sim(
           col("embedding"), col("query_vec"))).as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
+    Similarity.topPerQuery(pre, k, col("cosine").desc)
   }
 
   /**
@@ -250,7 +244,6 @@ object EmbeddingPca {
   def pcaBucketedTopK(corpus: DataFrame, queries: DataFrame, model: Model,
       planes: Int, probes: Int, rPrefix: Int,
       nComp: Int = NComponents, k: Int = 20, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val comps = (0 until nComp).map(c => model.components(c).map(_.toFloat))
     def coords(e: Column): Column =
       array(comps.map(w => rawCoord(e, w)): _*)
@@ -272,17 +265,12 @@ object EmbeddingPca {
     }.reduce(_ + _) // left-assoc — the oracle sums in the same order
     val scored = cand.select(col("query_id"), col("vec_id"), col("embedding"),
       col("query_vec"), Similarity.q9(dist).as("pca_dist"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("pca_dist").asc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= rPrefix)
+    val pre = Similarity.topPerQuery(scored, rPrefix, col("pca_dist").asc,
+        cut = true)
       .select(col("query_id"), col("vec_id"), col("pca_dist"),
         Similarity.q9(graft.functions.VectorFunctions.cosine_sim(
           col("embedding"), col("query_vec"))).as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
+    Similarity.topPerQuery(pre, k, col("cosine").desc)
   }
 
   /** Query-pack adapter: OCCUPANCY-BOUND 8-of-64-dim PCA first pass over

@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -190,8 +189,9 @@ object IvfIndex {
       .drop("_centroid_cos_raw")
       .filter(col("centroid_cos") < minCos)
 
-  /** The `nprobe` closest cell ids for a query vector column (shared with
-    * [[IvfPqIndex]] so both probe identically). */
+  /** The `nprobe` closest cell ids for a query vector column (shared by
+    * every codec's probe and the probe curve, so all layouts probe
+    * identically). */
   private[graft] def probeCellsColumn(
       model: Model, vec: org.apache.spark.sql.Column, nprobe: Int) =
     // codegen'd kernel since round 19 (graft.functions.ProbeCells): the
@@ -214,76 +214,111 @@ object IvfIndex {
       1, nprobe)
   }
 
-  /**
-   * Search: score queries only against corpus vectors in each query's
-   * `nprobe` closest cells. The unfiltered instantiation of
-   * [[searchFiltered]] (pred = true, which Catalyst folds away), so the
-   * q9 rounding, self-exclusion, and (cosine desc, vec_id asc) tiebreak
-   * — all oracle-replayed — live in exactly one body.
-   */
-  def search(
-      assignedCorpus: DataFrame,
-      queries: DataFrame,
-      model: Model,
-      k: Int,
-      nprobe: Int): DataFrame =
-    searchFiltered(assignedCorpus, queries, model, k, nprobe, lit(true))
+  /** The float layout: cells hold the raw vectors, so the first pass is
+    * the exact cosine and needs no rerank. Its model is the coarse
+    * quantizer itself. */
+  object FloatCodec extends IvfCodec[Model] {
+    val name = "float"
+    val storesVectors = true
+    def coarse(m: Model): Model = m
+    def fingerprint(m: Model): String = m.fingerprint
+    def train(corpus: DataFrame, nlist: Int, iters: Int,
+        stratifiedSeeds: Boolean): Model =
+      IvfIndex.train(corpus, nlist, iters, stratifiedSeeds)
+    def encode(corpus: DataFrame, m: Model): DataFrame = assign(corpus, m)
+    /** Every query column rides along `query_`-renamed, so a search
+      * predicate can reference it. */
+    def probe(queries: DataFrame, m: Model, nprobe: Int): DataFrame =
+      queries.select(queries.columns.map {
+        case "vec_id"    => col("vec_id").as("query_id")
+        case "embedding" => col("embedding").as("query_vec")
+        case c           => col(c).as(s"query_$c")
+      }: _*)
+        .withColumn("_probe",
+          explode(probeCellsColumn(m, col("query_vec"), nprobe)))
+        .withColumn("cell", col("_probe.cell"))
+        .drop("_probe")
+    val scoreName = "cosine"
+    def score(m: Model): Column =
+      round(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")), 9)
+    def save(spark: SparkSession, m: Model, dir: String): Unit =
+      ModelStore.saveCentroids(spark, m.centroids, s"$dir/ivf")
+    def load(spark: SparkSession, dir: String): Model =
+      Model(ModelStore.loadCentroids(spark, s"$dir/ivf"))
+  }
+
+  /** The exact rerank a code layout's first pass feeds: the float table
+    * its candidates re-score against, and the pool size `r` (≥ k). */
+  final case class Rerank(corpus: DataFrame, r: Int)
 
   /**
-   * PRE-FILTERED cell-pruned search — the "vector search WHERE clause" at
-   * index scale ([[Similarity.filteredTopK]]'s contract composed with the
-   * IVF layout): `pred` may reference corpus columns and `query_`-renamed
-   * query columns; it applies BEFORE the top-k cut, so the result is the
-   * true top-k of the eligible subset within the probed cells (recall <
-   * 1 only through the probe, exactly as the unfiltered [[search]]).
+   * Cell-pruned search: score queries only against the stored rows of
+   * each query's `nprobe` closest cells, by the codec's first-pass score.
+   * Without a rerank the first pass ranks the result; with one, its top
+   * `r` per query re-score exactly against the float corpus and the top
+   * `k` of those win. The self-exclusion, the q9 rounding of emitted
+   * cosines and the (score desc, vec_id asc) tiebreak are oracle-replayed.
    *
-   * 100 TB shape: the cell equi-join still drives dynamic partition
-   * pruning (only probed `cell=<i>/` directories open), and corpus-only
-   * conjuncts of `pred` push below the join into the pruned scan — a
-   * selective tenant/label filter cuts the probed fraction further, for
-   * free. The corpus never shuffles.
+   * `pred` PRE-FILTERS — the "vector search WHERE clause" at index scale
+   * ([[Similarity.filteredTopK]]'s contract composed with the layout): it
+   * may reference stored columns and `query_`-renamed query columns, and
+   * applies before the top-k cut, so the result is the true top-k of the
+   * eligible subset within the probed cells. The default `true` folds
+   * away in Catalyst.
+   *
+   * 100 TB shape: the cell equi-join against the broadcast (query ×
+   * probe-cell) side drives dynamic partition pruning (only probed
+   * `cell=<i>/` directories open), and stored-column conjuncts of `pred`
+   * push below the join into the pruned scan. The corpus never shuffles.
    */
-  def searchFiltered(
-      assignedCorpus: DataFrame,
-      queries: DataFrame,
-      model: Model,
-      k: Int,
-      nprobe: Int,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    val q = queries.select(queries.columns.map {
-      case "vec_id"    => col("vec_id").as("query_id")
-      case "embedding" => col("embedding").as("query_vec")
-      case c           => col(c).as(s"query_$c")
-    }: _*)
-      .withColumn("_probe",
-        explode(probeCellsColumn(model, col("query_vec"), nprobe)))
-      .withColumn("cell", col("_probe.cell"))
-      .drop("_probe")
-    val scored = assignedCorpus.join(broadcast(q), Seq("cell"))
+  def search[M](codec: IvfCodec[M], stored: DataFrame, queries: DataFrame,
+      model: M, k: Int, nprobe: Int, rerank: Option[Rerank] = None,
+      pred: Column = lit(true)): DataFrame = {
+    rerank.foreach(rr => require(rr.r >= k, "rerank pool must be at least k"))
+    val scored = stored
+      .join(broadcast(codec.probe(queries, model, nprobe)), Seq("cell"))
       .filter(pred && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id"),
-        round(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")), 9)
-          .as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id"),
+        codec.score(model).as(codec.scoreName))
+    val by = col(codec.scoreName).desc
+    rerank match {
+      case None => Similarity.topPerQuery(scored, k, by)
+      case Some(Rerank(corpus, r)) =>
+        val cands = Similarity.topPerQuery(scored, r, by, cut = true)
+          .select("query_id", "vec_id")
+        Similarity.rerankExact(cands, corpus, queries, k)
+    }
   }
 
-  /** [[searchFiltered]] over the persisted cell layout (dynamic partition
-    * pruning + pushed corpus-side filter conjuncts). */
-  def searchIndexFiltered(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      model: Model,
-      k: Int,
-      nprobe: Int,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    requireModelMatches(spark, path, model.fingerprint)
-    searchFiltered(readIndex(spark, path), queries, model, k, nprobe, pred)
+  /** [[search]] over the persisted layout at `path`, after the stamp
+    * check. The plan carries a `dynamicpruningexpression` partition
+    * filter (asserted in IvfSessionSpec). */
+  def searchIndex[M](codec: IvfCodec[M], spark: SparkSession, path: String,
+      queries: DataFrame, model: M, k: Int, nprobe: Int,
+      rerank: Option[Rerank] = None, pred: Column = lit(true)): DataFrame = {
+    requireModelMatches(spark, path, codec.fingerprint(model))
+    search(codec, readIndex(spark, path), queries, model, k, nprobe, rerank,
+      pred)
   }
+
+  /** Rerank pool for a code layout: [[Similarity.scaledCandidates]]'s
+    * corpus-fraction discipline applied to the PROBED mass `n·nprobe/
+    * nlist` (flat bq scales its pool to the whole corpus because its
+    * first pass sweeps the whole corpus; here the first pass only ever
+    * sees the probed fraction, so the oversample tracks that) — exact
+    * integer arithmetic, so the oracle derives the identical r from
+    * count(*). */
+  def scaledProbedPool(n: Long, nlist: Int, nprobe: Int): Int =
+    Similarity.scaledCandidates(n * nprobe / nlist)
+
+  /** The rerank a layout's first pass needs at probe depth `nprobe`:
+    * none where the layout stores the floats (its first pass is exact);
+    * for a code layout, the float corpus of `n` vectors at the
+    * [[scaledProbedPool]], at least `k`. */
+  def rerankFor(codec: IvfCodec[_], corpus: => DataFrame, n: => Long,
+      k: Int, nlist: Int, nprobe: Int): Option[Rerank] =
+    if (codec.storesVectors) None
+    else Some(Rerank(corpus, math.max(k, scaledProbedPool(n, nlist, nprobe))))
 
   // --- physical layout -----------------------------------------------
   //
@@ -459,10 +494,13 @@ object IvfIndex {
    * partition directory per cell (`cell=<i>/`) inside the base slice.
    * This is the design's 100 TB claim made real: a probe of `nprobe`
    * cells reads nprobe/nlist of the data because the directories for
-   * unprobed cells are never opened.
+   * unprobed cells are never opened. The codec decides what each cell
+   * row stores (floats or codes) and the stamp the base slice carries.
    */
-  def writeIndex(corpus: DataFrame, model: Model, path: String): Unit =
-    replaceRoot(assign(corpus, model), path, Some(model.fingerprint))
+  def writeIndex[M](codec: IvfCodec[M], corpus: DataFrame, model: M,
+      path: String): Unit =
+    replaceRoot(codec.encode(corpus, model), path,
+      Some(codec.fingerprint(model)))
 
   /** Index maintenance: route NEW vectors into the existing cell layout
     * without rebuilding — centroids stay fixed (the standard trade: cell
@@ -474,8 +512,9 @@ object IvfIndex {
     * passes its OWN micro-batch id so a foreachBatch REPLAY of an
     * uncommitted batch finds the slice already present and appends
     * nothing — exactly-once by slice name. */
-  def appendToIndex(delta: DataFrame, model: Model, path: String): Unit = {
-    appendToIndex(delta, model, path,
+  def appendToIndex[M](codec: IvfCodec[M], delta: DataFrame, model: M,
+      path: String): Unit = {
+    appendToIndex(codec, delta, model, path,
       nextBatchId(delta.sparkSession, path))
     ()
   }
@@ -494,17 +533,16 @@ object IvfIndex {
     *     orphan for readers to trip on;
     *  3. [[commitRebuild]] refuses to GC a concurrent slice it did not
     *     fold (the batchId ≤ gen flavor, which would be silent LOSS). */
-  def appendToIndex(delta: DataFrame, model: Model, path: String,
-      batchId: Long): Boolean = {
-    requireModelMatches(delta.sparkSession, path, model.fingerprint)
-    appendSliceVerified(assign(delta, model), path, batchId,
-      model.fingerprint)
+  def appendToIndex[M](codec: IvfCodec[M], delta: DataFrame, model: M,
+      path: String, batchId: Long): Boolean = {
+    val fp = codec.fingerprint(model)
+    requireModelMatches(delta.sparkSession, path, fp)
+    appendSliceVerified(codec.encode(delta, model), path, batchId, fp)
   }
 
   /** Stamped, post-rename-VERIFIED slice append — the write half of the
-    * append/rebuild race closure, shared by the float and composed code
-    * layouts (before round 17 the [[IvfPqIndex]]/[[IvfBqIndex]] appends
-    * carried the stamp but skipped the re-verify, so the common
+    * append/rebuild race closure (before round 17 the code layouts'
+    * appends carried the stamp but skipped the re-verify, so the common
     * interleaving left an orphan that failed every LATER read instead
     * of self-healing here by rollback). Returns false when the slice
     * already existed (replay skipped). */
@@ -579,46 +617,35 @@ object IvfIndex {
       round(max(col("n_vectors")) / avg(col("n_vectors")), 4).as("skew"))
       .withColumn("drifted", col("skew") > maxSkew)
 
-  /** Retrain on the CURRENT index contents (base + every appended slice)
-    * and commit the retrained layout as the next base generation — the
-    * repair [[driftReport]] calls for. CRASH-ATOMIC by the
-    * [[commitRebuild]] single-rename discipline: a crash at any point
-    * leaves a readable index (before the commit the old live set is
-    * fully intact; after it the new base wins). Returns the new model —
-    * centroids move, so searches must use it (ENFORCED CONTRACT since
-    * round 15: the new generation carries the new fingerprint, and a
-    * stale model fails [[requireModelMatches]] loudly on the next
-    * search or append instead of silently probing the wrong cells). */
-  def rebuildIndex(spark: SparkSession, path: String, nlist: Int,
-      iters: Int = 3): Model = {
+  /** Retrain and commit the retrained layout as the next base
+    * generation — the repair [[driftReport]] calls for. A layout that
+    * stores the floats retrains on its CURRENT contents (base + every
+    * appended slice); a code layout carries no floats, so it retrains
+    * from `corpus` (at scale, the table the index was built from). The
+    * coarse stage reseeds mass-proportionally, so a drifted mega-cell
+    * splits. CRASH-ATOMIC by the [[commitRebuild]] single-rename
+    * discipline: a crash at any point leaves a readable index (before the
+    * commit the old live set is fully intact; after it the new base
+    * wins). Returns the new model — centroids move, so searches must use
+    * it (ENFORCED CONTRACT since round 15: the new generation carries the
+    * new fingerprint, and a stale model fails [[requireModelMatches]]
+    * loudly on the next search or append instead of silently probing the
+    * wrong cells). */
+  def rebuildIndex[M](codec: IvfCodec[M], spark: SparkSession, path: String,
+      nlist: Int, iters: Int = 3, corpus: Option[DataFrame] = None): M = {
+    require(corpus.isDefined || codec.storesVectors,
+      s"the ${codec.name} layout stores no float vectors: rebuilding it " +
+        "needs the corpus it was built from")
     // snapshot the live set ONCE, before training, and read exactly
     // these dirs — the commit guards compare against this same baseline
     // (see commitRebuild's contract)
     val snapshot = liveSliceDirs(spark, path)
-    val vectors = readSlices(spark, path, snapshot)
-      .select("vec_id", "embedding")
-    val model = train(vectors, nlist, iters, stratifiedSeeds = true)
-    commitRebuild(spark, path, assign(vectors, model),
-      Some(model.fingerprint), snapshot)
+    val vectors = corpus.getOrElse(
+      readSlices(spark, path, snapshot).select("vec_id", "embedding"))
+    val model = codec.train(vectors, nlist, iters, stratifiedSeeds = true)
+    commitRebuild(spark, path, codec.encode(vectors, model),
+      Some(codec.fingerprint(model)), snapshot)
     model
-  }
-
-  /**
-   * Search the persisted index. [[search]]'s equi-join on `cell` against the
-   * broadcast (query × probe-cell) side triggers DYNAMIC PARTITION PRUNING:
-   * Spark reuses the broadcast to evaluate the probed cell set and skips
-   * every other partition directory at scan time — the plan carries a
-   * `dynamicpruningexpression` partition filter (asserted in IvfSessionSpec).
-   */
-  def searchIndex(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      model: Model,
-      k: Int,
-      nprobe: Int): DataFrame = {
-    requireModelMatches(spark, path, model.fingerprint)
-    search(readIndex(spark, path), queries, model, k, nprobe)
   }
 
   /**
@@ -703,7 +730,7 @@ object IvfIndex {
     val model = packModel(spark, sfDir)
     val dir = indexCache.computeIfAbsent(sfDir, _ => {
       val d = graft.WorkDirs.dir(s"ivf_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
+      writeIndex(FloatCodec, emb, model, d)
       d
     })
     (model, dir)
@@ -712,8 +739,8 @@ object IvfIndex {
   def ivfQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val (model, dir) = packIndex(spark, sfDir)
-    searchIndex(spark, dir, emb.filter(col("vec_id") < 5), model, k = 20,
-      nprobe = scaledNprobe(model.nlist))
+    searchIndex(FloatCodec, spark, dir, emb.filter(col("vec_id") < 5), model,
+      k = 20, nprobe = scaledNprobe(model.nlist))
   }
 
   /** Index-served ANN leg for the retrieval capstones (q_hybrid_search /
@@ -731,7 +758,7 @@ object IvfIndex {
     // (round 16) — the budget the measured recall/cost trade justifies,
     // not the √nlist heuristic; [[servingNprobe]] bounds it to the
     // heuristic band so the scale contract survives a degenerate curve
-    searchIndex(spark, dir, emb.filter(pred), model, k,
+    searchIndex(FloatCodec, spark, dir, emb.filter(pred), model, k,
       nprobe = servingNprobe(spark, sfDir))
   }
 
@@ -741,7 +768,7 @@ object IvfIndex {
   def ivfFilteredQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val (model, dir) = packIndex(spark, sfDir)
-    searchIndexFiltered(spark, dir, emb.filter(col("vec_id") < 5), model,
+    searchIndex(FloatCodec, spark, dir, emb.filter(col("vec_id") < 5), model,
       k = 10, nprobe = scaledNprobe(model.nlist),
       pred = col("label") === col("query_label"))
   }
@@ -760,27 +787,18 @@ object IvfIndex {
    * deployment reads to pick its probe budget — produced by the engine
    * and hash-checked against the relational replay, so a probe-selection
    * or pruning regression shows up as a wrong COUNT, not a vague slowdown.
+   * Every layout kind yields the same artifact shape (nprobe,
+   * n_candidates, n_matches, recall_micro), so [[servingDecision]] and
+   * [[ServingProbe]] read every curve identically; a code layout's steps
+   * search at the probed-mass rerank pool ([[rerankFor]]).
    *
    * Cost shape: each ladder step is one cell-pruned join (the same plan
    * as [[searchIndex]]); the exact baseline is one scan-bound pass — the
    * AnnRecall-gate price, paid once.
    */
-  def probeCurve(spark: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, model: Model, k: Int): DataFrame =
-    probeCurveWith(spark, path, corpus, queries, model, k)(
-      (q, np) => searchIndex(spark, path, q, model, k, np))
-
-  /** The curve machinery with the per-step SEARCH pluggable — the
-    * composed code layouts ([[IvfBqIndex.probeCurve]],
-    * [[IvfPqIndex.probeCurve]]) measure their serving decisions off the
-    * same artifact shape (nprobe, n_candidates, n_matches, recall_micro),
-    * so [[servingDecision]]/[[ServingProbe]] read every layout kind's
-    * curve identically. The candidate COUNT is the cell-pruned join over
-    * whatever rows the layout stores (floats or codes — same count by
-    * construction: the coarse stage decides what is read). */
-  private[graft] def probeCurveWith(spark: SparkSession, path: String,
-      corpus: DataFrame, queries: DataFrame, coarse: Model, k: Int)(
-      search: (DataFrame, Int) => DataFrame): DataFrame = {
+  def probeCurve[M](codec: IvfCodec[M], spark: SparkSession, path: String,
+      corpus: DataFrame, queries: DataFrame, model: M, k: Int): DataFrame = {
+    val coarse = codec.coarse(model)
     // the exact scan-bound baseline is the curve's most expensive leg:
     // checkpoint it once (the mmrSelect convention) instead of
     // re-executing it inside every ladder step's join
@@ -794,7 +812,11 @@ object IvfIndex {
     // curve could never meet its target and servingDecision would ship
     // the heuristic unflagged
     val denom = truth.count()
+    lazy val n = corpus.count()
     probeLadder(coarse.nlist).map { np =>
+      // the candidate COUNT is the cell-pruned join over whatever rows
+      // the layout stores (floats or codes — same count by construction:
+      // the coarse stage decides what is read)
       val probed = queries.select(
         col("vec_id").as("query_id"),
         explode(probeCellsColumn(coarse, col("embedding"), np)).as("probe"))
@@ -802,7 +824,8 @@ object IvfIndex {
       val cands = assigned.join(broadcast(probed), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
         .agg(count(lit(1)).as("n_candidates"))
-      val matches = search(queries, np)
+      val matches = searchIndex(codec, spark, path, queries, model, k, np,
+          rerankFor(codec, corpus, n, k, coarse.nlist, np))
         .select("query_id", "vec_id")
         .join(truth, Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("n_matches"))
@@ -837,7 +860,8 @@ object IvfIndex {
       val emb = Tables.load(spark, sfDir, "embeddings")
       val (model, dir) = packIndex(spark, sfDir)
       val curve =
-        probeCurve(spark, dir, emb, emb.filter(col("vec_id") < 5), model, k = 20)
+        probeCurve(FloatCodec, spark, dir, emb, emb.filter(col("vec_id") < 5),
+          model, k = 20)
       (curve.schema, curve.collect().toSeq)
     })
     import scala.jdk.CollectionConverters._
@@ -951,7 +975,7 @@ object IvfIndex {
       val before = packModel(spark, sfDir)
       val dir = graft.WorkDirs.dir(
         s"ivf_rebuild_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, before, dir)
+      writeIndex(FloatCodec, emb, before, dir)
       val assigned = assign(emb, before)
       val donorCell = assigned.groupBy("cell").count()
         .orderBy(col("count").desc, col("cell").asc)
@@ -969,11 +993,12 @@ object IvfIndex {
       delta.write.mode("overwrite").parquet(staging)
       val q = graft.streaming.VectorIngest.start(
         spark.readStream.schema(delta.schema).parquet(staging),
-        before, dir, checkpoint = s"$dir.ckpt",
+        FloatCodec, before, dir, checkpoint = s"$dir.ckpt",
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
       try q.awaitTermination() finally q.stop()
       val (_, nTotal, skew0) = skewStats(spark, dir)
-      val rebuilt = rebuildIndex(spark, dir, scaledNlist(nTotal), iters = 2)
+      val rebuilt = rebuildIndex(FloatCodec, spark, dir, scaledNlist(nTotal),
+        iters = 2)
       RebuildAudit(dir, rebuilt, nTotal, skew0, skew0 > 2000000L)
     })
 
@@ -1002,8 +1027,8 @@ object IvfIndex {
     val contents = readIndex(spark, a.dir).select("vec_id", "embedding")
     val truth = Similarity.bruteForceTopK(contents, queries, k = 20)
       .select("query_id", "vec_id").localCheckpoint()
-    val got = searchIndex(spark, a.dir, queries, a.rebuilt, k = 20,
-        nprobe = auditNprobe(a.rebuilt.nlist))
+    val got = searchIndex(FloatCodec, spark, a.dir, queries, a.rebuilt,
+        k = 20, nprobe = auditNprobe(a.rebuilt.nlist))
       .select("query_id", "vec_id")
     val recall = got.join(truth, Seq("query_id", "vec_id"))
       .agg(count(lit(1)).as("n_matches"))

@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -84,7 +82,8 @@ object IvfPqIndex {
     * `residual = true` the PQ stage trains on the coarse residuals
     * x̂ − c (un-normalized — the residual's magnitude IS information).
     * `stratifiedSeeds` passes through to the coarse stage — the
-    * mass-proportional seeding [[rebuildIndex]] repairs balance with. */
+    * mass-proportional seeding [[IvfIndex.rebuildIndex]] repairs
+    * balance with. */
   def train(corpus: DataFrame, nlist: Int, dim: Int = 64, m: Int = 8,
       k: Int = 16, coarseIters: Int = 3, pqIters: Int = 3,
       residual: Boolean = false, stratifiedSeeds: Boolean = false): Model = {
@@ -104,149 +103,91 @@ object IvfPqIndex {
     }
   }
 
-  /** The persisted rows: PQ codes with their IVF cell assignment.
-    * The normalized / encoded vectors are each materialized in their OWN
-    * projection: the m×k codeword scorings reference them, and
-    * `transform` (no codegen) re-evaluates inlined subexpressions per
-    * reference (same trap as PqIndex.encode /
-    * TextAnalysis.repetitionStats). */
-  private def encoded(corpus: DataFrame, model: Model): DataFrame =
-    IvfIndex.assign(corpus, model.coarse)
-      .select(col("vec_id"), col("cell"), PqIndex.normed(col("embedding")).as("_e"))
-      .select(col("vec_id"), col("cell"),
-        (if (model.residual)
-          residualCol(model.coarse, col("_e"), col("cell"))
-        else col("_e")).as("_enc"))
-      .select(col("vec_id"), col("cell"),
-        PqIndex.codesColumn(model.pq, col("_enc")).as("codes"))
+  /** The composed code layout: each cell row is (vec_id, cell, codes) —
+    * 8 B of codes per vector at m=8, no floats. The first pass is
+    * cell-pruned ADC; residual models encode x̂ − c(cell) and score
+    * q̂·c + q̂·r̂. [[GlobalCodec]] and [[ResidualCodec]] differ only in
+    * what they train: a loaded or given model carries its own
+    * `residual` flag, which drives encode, score and the stamp. */
+  final class Codec private[IvfPqIndex] (residual: Boolean)
+      extends IvfCodec[Model] {
+    val name = "pq"
+    val storesVectors = false
+    def coarse(m: Model): IvfIndex.Model = m.coarse
+    def fingerprint(m: Model): String = m.fingerprint
+    def train(corpus: DataFrame, nlist: Int, iters: Int,
+        stratifiedSeeds: Boolean): Model =
+      IvfPqIndex.train(corpus, nlist, coarseIters = iters, pqIters = iters,
+        residual = residual, stratifiedSeeds = stratifiedSeeds)
 
-  /** Persist the index: PQ codes partitioned by IVF cell (`cell=<i>/`
-    * inside the base slice — the [[IvfIndex]] slice layout, shared).
-    * A probe of `nprobe` cells reads nprobe/nlist of the CODES — the float
-    * vectors are not in the index at all. Residual models encode
-    * x̂ − c(cell); global models encode x̂ directly. */
-  def writeIndex(corpus: DataFrame, model: Model, path: String): Unit =
-    IvfIndex.replaceRoot(encoded(corpus, model), path, Some(model.fingerprint))
+    /** The normalized / encoded vectors are each materialized in their
+      * OWN projection: the m×k codeword scorings reference them, and
+      * `transform` (no codegen) re-evaluates inlined subexpressions per
+      * reference (same trap as PqIndex.encode /
+      * TextAnalysis.repetitionStats). */
+    def encode(corpus: DataFrame, m: Model): DataFrame =
+      IvfIndex.assign(corpus, m.coarse)
+        .select(col("vec_id"), col("cell"),
+          PqIndex.normed(col("embedding")).as("_e"))
+        .select(col("vec_id"), col("cell"),
+          (if (m.residual)
+            residualCol(m.coarse, col("_e"), col("cell"))
+          else col("_e")).as("_enc"))
+        .select(col("vec_id"), col("cell"),
+          PqIndex.codesColumn(m.pq, col("_enc")).as("codes"))
 
-  /** Route NEW vectors into the existing code layout — [[IvfIndex
-    * .appendToIndex]] for the composed index: centroids and codebooks
-    * stay frozen, cost ∝ the delta, cell balance drifts as the corpus
-    * grows. [[IvfIndex.cellStats]]/[[IvfIndex.driftReport]] read this
-    * layout unchanged (same slice dirs, codes instead of floats), and
-    * [[rebuildIndex]] is the repair. Appends are batch-id-addressed
-    * slices like the float index's — replay-idempotent. */
-  def appendToIndex(delta: DataFrame, model: Model, path: String): Unit = {
-    appendToIndex(delta, model, path,
-      IvfIndex.nextBatchId(delta.sparkSession, path))
-    ()
+    /** Probe cells score on the NORMALIZED query (same ranking as raw —
+      * positive rescale — and in residual mode the probe score IS the
+      * q̂·c term of the reconstruction); ADC tables need the normalized
+      * query too — each in a named projection (HOF re-eval trap). */
+    def probe(queries: DataFrame, m: Model, nprobe: Int): DataFrame =
+      queries
+        .select(col("vec_id").as("query_id"),
+          PqIndex.normed(col("embedding")).as("_e"))
+        .select(col("query_id"), col("_e"),
+          IvfIndex.probeCellsColumn(m.coarse, col("_e"), nprobe).as("_pc"))
+        .select(col("query_id"),
+          PqIndex.adcTablesColumn(m.pq, col("_e")).as("tables"),
+          col("_pc"))
+        .select(col("query_id"), col("tables"), explode(col("_pc")).as("probe"))
+        .select(col("query_id"), col("tables"), col("probe.cell").as("cell"),
+          col("probe.score").as("cell_dot"))
+
+    val scoreName = "adc_score"
+
+    /** Residual ADC reconstructs q̂·x̂ ≈ q̂·c + q̂·r̂: the cell term comes
+      * from the probe, the residual term from the lookup tables; global
+      * ADC is the table sum alone. Quantized before ranking so the
+      * candidate cut is ulp-robust cross-engine (see Similarity.q9). */
+    def score(m: Model): Column = {
+      val adcTable = PqIndex.adcScore(col("codes"), col("tables"))
+      round(if (m.residual) adcTable + col("cell_dot") else adcTable, 9)
+    }
+
+    /** Coarse centroids + codebooks + the residual flag (it changes what
+      * a stored code MEANS, so it is part of the artifact, not a caller
+      * convention). */
+    def save(spark: SparkSession, m: Model, dir: String): Unit = {
+      import spark.implicits._
+      ModelStore.saveCentroids(spark, m.coarse.centroids, s"$dir/ivfpq/coarse")
+      ModelStore.savePqCodebooks(spark, m.pq, s"$dir/ivfpq")
+      Seq(Tuple1(m.residual)).toDF("residual")
+        .write.mode("overwrite").parquet(s"$dir/ivfpq/residual")
+    }
+
+    def load(spark: SparkSession, dir: String): Model =
+      Model(
+        IvfIndex.Model(ModelStore.loadCentroids(spark, s"$dir/ivfpq/coarse")),
+        ModelStore.loadPqCodebooks(spark, s"$dir/ivfpq"),
+        residual = spark.read.parquet(s"$dir/ivfpq/residual")
+          .head().getAs[Boolean]("residual"))
   }
 
-  /** Batch-id-addressed append (the streaming overload, PQ-code flavor):
-    * false = slice existed, replay skipped. Stamped AND
-    * post-rename-verified — the full race closure, shared with the float
-    * layout ([[IvfIndex.appendSliceVerified]]). */
-  def appendToIndex(delta: DataFrame, model: Model, path: String,
-      batchId: Long): Boolean = {
-    val spark = delta.sparkSession
-    IvfIndex.requireModelMatches(spark, path, model.fingerprint)
-    IvfIndex.appendSliceVerified(encoded(delta, model), path, batchId,
-      model.fingerprint)
-  }
+  /** Trains global-PQ codes — the service CLI's `pq` layout. */
+  val GlobalCodec = new Codec(residual = false)
 
-  /** The composed layout's measured recall/cost curve —
-    * [[IvfIndex.probeCurveWith]] over the cell-pruned ADC search at the
-    * probed-mass rerank pool ([[IvfBqIndex.scaledProbedPool]] — the same
-    * probed-fraction discipline; the pack query's fixed r=50 stays
-    * pinned to its established oracle). */
-  def probeCurve(spark: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, model: Model, k: Int, n: Long): DataFrame =
-    IvfIndex.probeCurveWith(spark, path, corpus, queries, model.coarse, k)(
-      (q, np) => searchIndex(spark, path, corpus, q, model, k, np,
-        r = math.max(k,
-          IvfBqIndex.scaledProbedPool(n, model.coarse.nlist, np))))
-
-  /** Retrain BOTH stages on the current corpus (the code layout carries
-    * no floats, so the corpus frame is required — at scale it is the
-    * table the index was built from) and commit the re-encoded layout as
-    * the next base generation — crash-atomic by the same single-rename
-    * fold as [[IvfIndex.rebuildIndex]]. The coarse stage reseeds
-    * mass-proportionally, so a drifted mega-cell splits; returns the new
-    * model (old models probe the wrong cells of the new layout — same
-    * contract as the IVF rebuild). */
-  def rebuildIndex(spark: SparkSession, path: String, corpus: DataFrame,
-      nlist: Int, dim: Int = 64, m: Int = 8, k: Int = 16,
-      coarseIters: Int = 3, pqIters: Int = 3,
-      residual: Boolean = false): Model = {
-    // live-set snapshot BEFORE training — the commit guards' baseline
-    // (IvfIndex.commitRebuild's contract): a slice appended during the
-    // two-stage training aborts the commit loudly instead of being
-    // folded un-read
-    val snapshot = IvfIndex.liveSliceDirs(spark, path)
-    val model = train(corpus, nlist, dim, m, k, coarseIters, pqIters,
-      residual, stratifiedSeeds = true)
-    IvfIndex.commitRebuild(spark, path, encoded(corpus, model),
-      Some(model.fingerprint), snapshot)
-    model
-  }
-
-  /**
-   * Cell-pruned ADC + exact rerank over a persisted index. Per query: the
-   * `nprobe` closest cells are probed (equi-join on `cell` against the
-   * broadcast query side → dynamic partition pruning skips every other
-   * cell directory), candidates are ADC-scored from codes alone, the top
-   * `r` are re-scored exactly from the corpus floats, and the top `k` win.
-   */
-  def searchIndex(spark: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, model: Model, k: Int, nprobe: Int, r: Int): DataFrame = {
-    require(r >= k, "rerank pool must be at least k")
-    IvfIndex.requireModelMatches(spark, path, model.fingerprint)
-    val encoded = IvfIndex.readIndex(spark, path) // (vec_id, codes, cell)
-
-    // probe cells score on the NORMALIZED query (same ranking as raw —
-    // positive rescale — and in residual mode the probe score IS the
-    // q̂·c term of the reconstruction); ADC tables need the normalized
-    // query too — each in a named projection (HOF re-eval trap)
-    val q = queries
-      .select(col("vec_id").as("query_id"),
-        PqIndex.normed(col("embedding")).as("_e"))
-      .select(col("query_id"), col("_e"),
-        IvfIndex.probeCellsColumn(model.coarse, col("_e"), nprobe).as("_pc"))
-      .select(col("query_id"),
-        PqIndex.adcTablesColumn(model.pq, col("_e")).as("tables"),
-        col("_pc"))
-      .select(col("query_id"), col("tables"), explode(col("_pc")).as("probe"))
-      .select(col("query_id"), col("tables"), col("probe.cell").as("cell"),
-        col("probe.score").as("cell_dot"))
-
-    // residual ADC reconstructs q̂·x̂ ≈ q̂·c + q̂·r̂: the cell term comes
-    // from the probe, the residual term from the lookup tables; global
-    // ADC is the table sum alone
-    val adcTable = PqIndex.adcScore(col("codes"), col("tables"))
-    val adc = if (model.residual) adcTable + col("cell_dot") else adcTable
-    val scored = encoded.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        // quantized before ranking so the candidate cut is ulp-robust
-        // cross-engine (see Similarity.q9)
-        round(adc, 9).as("adc_score"))
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adc_score").desc, col("vec_id").asc)
-    val cands = scored.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= r)
-      .select("query_id", "vec_id")
-
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val qemb = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_vec"))
-    val exact = cands.join(emb, "vec_id").join(broadcast(qemb), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        round(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")), 9)
-          .as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    exact.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-  }
+  /** Trains residual-PQ codes (the IVFADC §IV scheme). */
+  val ResidualCodec = new Codec(residual = true)
 
   /** Models memoized per corpus (train once, search many — the production
     * shape; both stages are deterministic so cached ≡ fresh). */
@@ -269,21 +210,8 @@ object IvfPqIndex {
     * a corpus-sized probe count ([[IvfIndex.scaledNlist]] cells,
     * [[IvfIndex.scaledNprobe]] probes — decade-stable occupancy), ADC
     * pool r=50, exact top-10. */
-  def ivfpqQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val nl = IvfIndex.scaledNlist(
-      graft.sources.Tables.rowCount(spark, sfDir, "embeddings"))
-    val model = modelCache.computeIfAbsent(s"$sfDir#nlist=$nl#m=8#k=16",
-      _ => train(emb, nlist = nl, dim = 64, m = 8, k = 16,
-        coarseIters = 2, pqIters = 2))
-    val dir = indexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivfpq_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
-      d
-    })
-    searchIndex(spark, dir, emb, emb.filter(col("vec_id") < 5), model,
-      k = 10, nprobe = IvfIndex.scaledNprobe(nl), r = 50)
-  }
+  def ivfpqQuery(spark: SparkSession, sfDir: String): DataFrame =
+    packQuery(spark, sfDir, GlobalCodec, modelCache, indexCache, "ivfpq")
 
   /** Residual models live in their OWN cache so [[cachedModel]]'s
     * one-model contract (the global oracle generator) stays intact. */
@@ -304,19 +232,25 @@ object IvfPqIndex {
     * probe, pool, and k as [[ivfpqQuery]], but codes quantize x̂ − c and
     * ADC reconstructs q̂·c + q̂·r̂ — the IVFADC §IV scheme, hash-checked
     * against a generated SQL replay like its global twin. */
-  def ivfpqResidualQuery(spark: SparkSession, sfDir: String): DataFrame = {
+  def ivfpqResidualQuery(spark: SparkSession, sfDir: String): DataFrame =
+    packQuery(spark, sfDir, ResidualCodec, residualModelCache,
+      residualIndexCache, "ivfpqres")
+
+  private def packQuery(spark: SparkSession, sfDir: String, codec: Codec,
+      models: java.util.concurrent.ConcurrentHashMap[String, Model],
+      indexes: java.util.concurrent.ConcurrentHashMap[String, String],
+      tag: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val nl = IvfIndex.scaledNlist(
-      graft.sources.Tables.rowCount(spark, sfDir, "embeddings"))
-    val model = residualModelCache.computeIfAbsent(s"$sfDir#res#nlist=$nl#m=8#k=16",
-      _ => train(emb, nlist = nl, dim = 64, m = 8, k = 16,
-        coarseIters = 2, pqIters = 2, residual = true))
-    val dir = residualIndexCache.computeIfAbsent(sfDir, _ => {
-      val d = graft.WorkDirs.dir(s"ivfpqres_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-      writeIndex(emb, model, d)
+    val nl = IvfIndex.scaledNlist(Tables.rowCount(spark, sfDir, "embeddings"))
+    val model = models.computeIfAbsent(s"$sfDir#nlist=$nl#m=8#k=16",
+      _ => codec.train(emb, nl, iters = 2))
+    val dir = indexes.computeIfAbsent(sfDir, _ => {
+      val d = graft.WorkDirs.dir(s"${tag}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+      IvfIndex.writeIndex(codec, emb, model, d)
       d
     })
-    searchIndex(spark, dir, emb, emb.filter(col("vec_id") < 5), model,
-      k = 10, nprobe = IvfIndex.scaledNprobe(nl), r = 50)
+    IvfIndex.searchIndex(codec, spark, dir, emb.filter(col("vec_id") < 5),
+      model, k = 10, nprobe = IvfIndex.scaledNprobe(nl),
+      rerank = Some(IvfIndex.Rerank(emb, 50)))
   }
 }

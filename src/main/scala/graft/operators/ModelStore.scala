@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
  * Persistence for the engine's learned artifacts — BPE merge tables and
  * PCA models — as plain parquet under a model directory: train once on
  * the cluster, ship the artifact, load it anywhere (including a job that
- * never sees the training corpus). The IVF/PQ index stores already
- * persist themselves through the cell-store writer; this covers the two
- * driver-resident models the same way, with the schemas kept trivially
+ * never sees the training corpus). The schemas stay trivially
  * inspectable (`merges`: rank/lhs/rhs/count rows; `pca`: tagged
- * (kind, component, dim, value) rows).
+ * (kind, component, dim, value) rows). The IVF layout models persist
+ * through their [[IvfCodec]] (`save`/`load`) on the centroid and
+ * codebook rows defined here.
  *
  * Writes go through a temp-dir rename via the normal parquet committer
  * (job-level atomicity on a local/HDFS-like FS, same guarantee every
@@ -47,9 +47,13 @@ object ModelStore {
   }
 
   /** Centroid-matrix rows (cell, dim, value) — FLOAT-BIT EXACT through
-    * parquet's float32 physical type (the device every composed-model
-    * save below shares). */
-  private def saveCentroids(spark: SparkSession,
+    * parquet's float32 physical type, so a loaded model's fingerprint
+    * equals the saved one's and the layout stamp
+    * ([[IvfIndex.requireModelMatches]]) survives the round-trip: this is
+    * what lets separate CLI PROCESSES share one index safely — every
+    * invocation re-loads the artifact, and a stale artifact fails the
+    * stamp loudly exactly like a stale in-memory model. */
+  private[operators] def saveCentroids(spark: SparkSession,
       centroids: Seq[Seq[Float]], dir: String): Unit = {
     import spark.implicits._
     val rows = for (c <- centroids.indices; d <- centroids(c).indices)
@@ -57,30 +61,12 @@ object ModelStore {
     rows.toDF("cell", "dim", "value").write.mode("overwrite").parquet(dir)
   }
 
-  private def loadCentroids(spark: SparkSession, dir: String): Seq[Seq[Float]] =
+  private[operators] def loadCentroids(spark: SparkSession, dir: String): Seq[Seq[Float]] =
     spark.read.parquet(dir).collect()
       .groupBy(_.getAs[Int]("cell")).toSeq.sortBy(_._1)
       .map { case (_, rs) =>
         rs.sortBy(_.getAs[Int]("dim")).map(_.getAs[Float]("value")).toSeq
       }
-
-  /** IVF coarse-quantizer persistence, (cell, dim, value) float rows —
-    * FLOAT-BIT EXACT through parquet's float32 physical type, so the
-    * loaded model's fingerprint equals the saved one's and the layout
-    * stamp ([[IvfIndex.requireModelMatches]]) survives the round-trip:
-    * this is what lets separate CLI PROCESSES share one index safely —
-    * every invocation re-loads the artifact, and a stale artifact fails
-    * the stamp loudly exactly like a stale in-memory model. */
-  def saveIvfModel(spark: SparkSession, m: IvfIndex.Model, path: String): Unit =
-    saveCentroids(spark, m.centroids, s"$path/ivf")
-
-  def loadIvfModel(spark: SparkSession, path: String): IvfIndex.Model =
-    IvfIndex.Model(loadCentroids(spark, s"$path/ivf"))
-
-  // --- composed-layout models (round 18: before this, only the float
-  // --- IVF model crossed a process boundary, so the composed tiers that
-  // --- gained rebuild + coordinatedSwap could not be operated from the
-  // --- service CLI at all) -------------------------------------------
 
   /** Product codebooks as (sub, code, dim, value) float rows plus a
     * one-row (dim, m) meta — every shape parameter of
@@ -112,38 +98,6 @@ object ModelStore {
       }
     PqIndex.Codebooks(meta.getAs[Int]("dim"), meta.getAs[Int]("m"), books)
   }
-
-  /** IVF×PQ composed model: coarse centroids + codebooks + the residual
-    * flag (it changes what a stored code MEANS, so it is part of the
-    * artifact, not a caller convention). Fingerprint-exact round-trip —
-    * the cross-process staleness contract of the float artifact,
-    * extended to the composed layout. */
-  def saveIvfPqModel(spark: SparkSession, m: IvfPqIndex.Model,
-      path: String): Unit = {
-    import spark.implicits._
-    saveCentroids(spark, m.coarse.centroids, s"$path/ivfpq/coarse")
-    savePqCodebooks(spark, m.pq, s"$path/ivfpq")
-    Seq(Tuple1(m.residual)).toDF("residual")
-      .write.mode("overwrite").parquet(s"$path/ivfpq/residual")
-  }
-
-  def loadIvfPqModel(spark: SparkSession, path: String): IvfPqIndex.Model =
-    IvfPqIndex.Model(
-      IvfIndex.Model(loadCentroids(spark, s"$path/ivfpq/coarse")),
-      loadPqCodebooks(spark, s"$path/ivfpq"),
-      residual = spark.read.parquet(s"$path/ivfpq/residual")
-        .head().getAs[Boolean]("residual"))
-
-  /** IVF×BQ composed model — the coarse quantizer alone (BQ's sign
-    * encode is training-free), saved under its OWN subdir so a float
-    * artifact and a code artifact can never be confused: the layout
-    * stamp derives via [[IvfBqIndex.fingerprintOf]]. */
-  def saveIvfBqModel(spark: SparkSession, coarse: IvfIndex.Model,
-      path: String): Unit =
-    saveCentroids(spark, coarse.centroids, s"$path/ivfbq")
-
-  def loadIvfBqModel(spark: SparkSession, path: String): IvfIndex.Model =
-    IvfIndex.Model(loadCentroids(spark, s"$path/ivfbq"))
 
   /** OPQ model: the orthonormal rotation rows plus the codebooks trained
     * in the rotated space — float-bit exact like every save here. */

@@ -124,7 +124,7 @@ object OpqIndex {
         PqIndex.adcTablesColumn(model.pq, col("embedding")).as("tables"))
     val cands = PqIndex.searchAdcPrepared(encoded, tables, r)
       .select(col("query_id"), col("vec_id"))
-    PqIndex.rerankExact(cands, corpus, queries, k)
+    Similarity.rerankExact(cands, corpus, queries, k)
   }
 
   /** Models memoized per corpus (the [[PqIndex.pqQuery]] contract):

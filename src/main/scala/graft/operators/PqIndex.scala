@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.VectorFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -212,10 +211,7 @@ object PqIndex {
         // quantized before ranking so the candidate cut is ulp-robust
         // cross-engine (see Similarity.q9)
         round(adcScore(col("codes"), col("tables")), 9).as("adc_score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    Similarity.topPerQuery(scored, k, col("adc_score").desc)
   }
 
   /**
@@ -228,25 +224,7 @@ object PqIndex {
     require(r >= k, "rerank pool must be at least k")
     val cands = searchAdc(encode(corpus, model), queries, model, r)
       .select(col("query_id"), col("vec_id"))
-    rerankExact(cands, corpus, queries, k)
-  }
-
-  /** Exact-cosine rerank of `cands(query_id, vec_id)` against the RAW
-    * embeddings, top-`k` — shared by the PQ and OPQ tiers (only r float
-    * vectors per query are ever read). */
-  private[operators] def rerankExact(cands: DataFrame, corpus: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val qemb = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_vec"))
-    val exact = cands.join(emb, "vec_id").join(broadcast(qemb), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        round(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")), 9)
-          .as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    exact.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    Similarity.rerankExact(cands, corpus, queries, k)
   }
 
   /** Models memoized per corpus, like IVF: train once, search many. */

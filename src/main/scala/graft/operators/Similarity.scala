@@ -31,6 +31,35 @@ object Similarity {
     * the deterministic id tiebreak), so rank columns are ulp-robust too. */
   private[operators] def q9(c: Column): Column = round(c, 9)
 
+  /** The ranked-neighbour tail every vector tier ends in: number each
+    * query's rows by `by`, with `vec_id` ascending as the total tiebreak,
+    * and keep the first `k`. The kept rows carry a bigint `rank` (the type
+    * of DuckDB's row_number in the oracle); a candidate cut ahead of an
+    * exact rerank (`cut = true`) carries an int `rn` instead, which the
+    * caller projects away. */
+  private[operators] def topPerQuery(scored: DataFrame, k: Int, by: Column,
+      cut: Boolean = false): DataFrame = {
+    val n = row_number().over(
+      Window.partitionBy("query_id").orderBy(by, col("vec_id").asc))
+    if (cut) scored.withColumn("rn", n).filter(col("rn") <= k)
+    else scored.withColumn("rank", n.cast("bigint")).filter(col("rank") <= k)
+  }
+
+  /** Exact-cosine rerank of `cands(query_id, vec_id)` against the RAW
+    * embeddings, top-`k` — the tail of every compressed tier (only the
+    * candidates' float vectors are ever read). */
+  private[operators] def rerankExact(cands: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int): DataFrame = {
+    val emb = corpus.select(col("vec_id"), col("embedding"))
+    val qemb = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("query_vec"))
+    val exact = cands.join(emb, "vec_id").join(broadcast(qemb), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")))
+          .as("cosine"))
+    topPerQuery(exact, k, col("cosine").desc)
+  }
+
   /** Brute-force exact top-k neighbors for each query vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(
@@ -39,11 +68,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec"))).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    // bigint rank: lines up with DuckDB's row_number type in the oracle
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, col("cosine").desc)
   }
 
   /** Deterministic pseudo-random hyperplanes (shared with query side, with
@@ -95,10 +120,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec"))).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, col("cosine").desc)
   }
 
   /** DuckDB per-plane dot-product list over a DOUBLE[] column — the
@@ -174,10 +196,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec"))).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, col("cosine").desc)
   }
 
   /**
@@ -209,10 +228,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec"))).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, col("cosine").desc)
   }
 
   /**
@@ -243,17 +259,11 @@ object Similarity {
         q9(VectorFunctions.cosine_sim(
           slice(col("embedding"), 1, dPrefix),
           slice(col("query_vec"), 1, dPrefix))).as("prefix_cos"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("prefix_cos").desc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= r)
+    val pre = topPerQuery(scored, r, col("prefix_cos").desc, cut = true)
       .select(col("query_id"), col("vec_id"), col("prefix_cos"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")))
           .as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(pre, k, col("cosine").desc)
   }
 
   /**
@@ -286,17 +296,11 @@ object Similarity {
         q9(VectorFunctions.cosine_sim(
           slice(col("embedding"), 1, dPrefix),
           slice(col("query_vec"), 1, dPrefix))).as("prefix_cos"))
-    val wPre = Window.partitionBy("query_id")
-      .orderBy(col("prefix_cos").desc, col("vec_id").asc)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cand.withColumn("_pr", row_number().over(wPre))
-      .filter(col("_pr") <= rPrefix)
+    val pre = topPerQuery(cand, rPrefix, col("prefix_cos").desc, cut = true)
       .select(col("query_id"), col("vec_id"), col("prefix_cos"),
         q9(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")))
           .as("cosine"))
-      .withColumn("rank", row_number().over(wFull).cast("bigint"))
-      .filter(col("rank") <= k)
+    topPerQuery(pre, k, col("cosine").desc)
   }
 
   /** Prefix-cut budget for the bucketed two-stage tiers: a quarter of the

@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.VectorFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -82,22 +81,10 @@ object SqIndex {
         // quantized before the candidate cut, like every float kernel
         round(VectorFunctions.dot_product(col("deq"), col("qv")), 9)
           .as("sq_score"))
-    val wSq = Window.partitionBy("query_id")
-      .orderBy(col("sq_score").desc, col("vec_id").asc)
-    val cands = scored.withColumn("rn", row_number().over(wSq))
-      .filter(col("rn") <= r)
+    val cands = Similarity.topPerQuery(scored, r, col("sq_score").desc,
+        cut = true)
       .select("query_id", "vec_id")
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val qemb = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_vec"))
-    val exact = cands.join(emb, "vec_id").join(broadcast(qemb), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        round(VectorFunctions.cosine_sim(col("embedding"), col("query_vec")), 9)
-          .as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    exact.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
+    Similarity.rerankExact(cands, corpus, queries, k)
   }
 
   /** Models memoized per corpus; the single cached model feeds the oracle

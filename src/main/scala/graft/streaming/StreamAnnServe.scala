@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfCodec, IvfIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -37,41 +37,31 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamAnnServe {
 
   /** Start answering the query-vector stream (`vec_id`, `embedding`)
-    * from the index at `indexPath`; top-`k` per query at `nprobe`.
+    * from the `codec` layout at `indexPath`; top-`k` per query at
+    * `nprobe`, exact-reranked when `rerank` is given (code layouts).
     * Output slice ids (and the `batch_id` column) are offset by
     * [[DeltaLayout.sliceOffset]] — a fresh checkpoint serving into a
     * populated output root must not drop its first answer batches as
     * replays of already-present slice names (the ingest advisory,
     * output flavor). */
-  def start(
+  def start[M](
       queries: DataFrame,
-      model: IvfIndex.Model,
+      codec: IvfCodec[M],
+      model: M,
       indexPath: String,
       out: String,
       checkpoint: String,
       k: Int,
       nprobe: Int,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    startWith(queries, out, checkpoint, trigger)(
-      batch => IvfIndex.searchIndex(queries.sparkSession, indexPath, batch,
-        model, k, nprobe))
-
-  /** The serve stream with the per-batch SEARCH pluggable — the composed
-    * code layouts serve through the same offset/checkpoint/output-slice
-    * discipline with their own cell-pruned first pass
-    * ([[graft.operators.IvfBqIndex.searchIndex]] /
-    * [[graft.operators.IvfPqIndex.searchIndex]]). */
-  def startWith(
-      queries: DataFrame,
-      out: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L))(
-      search: DataFrame => DataFrame): StreamingQuery = {
+      rerank: Option[IvfIndex.Rerank] = None,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val spark = queries.sparkSession
     val offset = DeltaLayout.sliceOffset(spark, checkpoint, out)
+    val serve = serveBatch(spark, codec, model, indexPath, out, k, nprobe,
+      rerank)
     queries.writeStream
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        serveBatchWith(spark, out, search)(batch, offset + batchId))
+        serve(batch, offset + batchId))
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
@@ -79,16 +69,12 @@ object StreamAnnServe {
 
   /** One micro-batch: probe the live index, commit the answer slice.
     * Exposed so a replay (same batchId) is directly testable. */
-  private[graft] def serveBatch(spark: SparkSession, model: IvfIndex.Model,
-      indexPath: String, out: String, k: Int,
-      nprobe: Int): (DataFrame, Long) => Unit =
-    serveBatchWith(spark, out,
-      batch => IvfIndex.searchIndex(spark, indexPath, batch, model, k, nprobe))
-
-  private def serveBatchWith(spark: SparkSession, out: String,
-      search: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+  private[graft] def serveBatch[M](spark: SparkSession, codec: IvfCodec[M],
+      model: M, indexPath: String, out: String, k: Int, nprobe: Int,
+      rerank: Option[IvfIndex.Rerank] = None): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      val res = search(batch)
+      val res = IvfIndex.searchIndex(codec, spark, indexPath, batch, model,
+          k, nprobe, rerank)
         .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
       DeltaLayout.writeSlice(res, out, s"delta=b$batchId")
       ()

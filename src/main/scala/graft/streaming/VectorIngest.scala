@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfCodec, IvfIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -34,41 +34,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  */
 object VectorIngest {
 
-  /** Start appending the embedding stream into the index at `path`.
-    * Slice ids are offset by [[DeltaLayout.sliceOffset]] so a fresh
-    * checkpoint on a populated index can never silently drop its first
-    * batches as replays of already-present slice names (the round-17
-    * advisory — see the offset's scaladoc). */
-  def start(
+  /** Start appending the embedding stream into the index at `path`, each
+    * micro-batch encoded by `codec` against the frozen `model`. Slice ids
+    * are offset by [[DeltaLayout.sliceOffset]] so a fresh checkpoint on a
+    * populated index can never silently drop its first batches as
+    * replays of already-present slice names (the round-17 advisory — see
+    * the offset's scaladoc): offset + micro-batch id IS the slice
+    * address, so same-checkpoint replays are no-ops and fresh
+    * checkpoints can never collide with or land beneath slices an
+    * earlier stream or fold already committed. */
+  def start[M](
       embeddings: DataFrame,
-      model: IvfIndex.Model,
+      codec: IvfCodec[M],
+      model: M,
       path: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    startWith(embeddings, path, checkpoint, trigger)(
-      (batch, sliceId) => { IvfIndex.appendToIndex(batch, model, path, sliceId); () })
-
-  /** The ingest stream with the per-batch APPEND pluggable — the
-    * composed code layouts ingest through the same offset/checkpoint
-    * discipline with their own encode+append
-    * ([[graft.operators.IvfBqIndex.appendToIndex]] /
-    * [[graft.operators.IvfPqIndex.appendToIndex]], batch-id overloads).
-    * `append` receives the OFFSET slice id — it must address the slice
-    * by it verbatim (offset + micro-batch id IS the slice address:
-    * same-checkpoint replays are no-ops, fresh checkpoints can never
-    * collide with or land beneath slices an earlier stream or fold
-    * already committed). */
-  def startWith(
-      embeddings: DataFrame,
-      path: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L))(
-      append: (DataFrame, Long) => Unit): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val offset =
       DeltaLayout.sliceOffset(embeddings.sparkSession, checkpoint, path)
     embeddings.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        append(batch, offset + batchId))
+      .foreachBatch((batch: DataFrame, batchId: Long) => {
+        IvfIndex.appendToIndex(codec, batch, model, path, offset + batchId)
+        ()
+      })
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()

@@ -35,11 +35,10 @@ object VectorService {
 
   /** Drain + stop the service's streams, then run `rebuild` and return
     * its model — the swap PARAMETERIZED over the layout kind (round 17:
-    * it was hard-wired to the float layout; the composed code layouts
-    * rebuild too — pass e.g. `IvfBqIndex.rebuildIndex(...)` or
-    * `IvfPqIndex.rebuildIndex(...)` and the drain/stop/commit
-    * coordination is identical, because all three share
-    * [[IvfIndex.commitRebuild]]'s staging discipline and stamp). */
+    * it was hard-wired to the float layout; every codec's
+    * [[IvfIndex.rebuildIndex]] shares [[IvfIndex.commitRebuild]]'s
+    * staging discipline and stamp, so the drain/stop/commit coordination
+    * is identical). */
   def coordinatedSwap[M](streams: Seq[StreamingQuery])(rebuild: => M): M = {
     streams.foreach(_.processAllAvailable())
     streams.foreach(_.stop())
@@ -56,7 +55,8 @@ object VectorService {
       nlist: Int,
       streams: Seq[StreamingQuery],
       iters: Int = 3): IvfIndex.Model =
-    coordinatedSwap(streams)(IvfIndex.rebuildIndex(spark, path, nlist, iters))
+    coordinatedSwap(streams)(
+      IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, path, nlist, iters))
 
   // --- drift-triggered rebuild policy (q_service_policy) ---------------
 
@@ -309,7 +309,7 @@ object VectorService {
         .select("vec_id", "embedding")
       val before = IvfIndex.packModel(spark, sfDir)
       val dir = graft.WorkDirs.dir(s"vecsvc_$tag")
-      IvfIndex.writeIndex(emb, before, dir)
+      IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, before, dir)
 
       // the skewed delta: donor cell (largest population, lowest id
       // tiebreak) cloned at each offset — the q_ivf_rebuild construction,
@@ -331,13 +331,14 @@ object VectorService {
       // (ProcessingTime) so the coordinated swap drains real streams
       val ingest = VectorIngest.start(
         spark.readStream.schema(delta.schema).parquet(deltaDir),
-        before, dir, checkpoint = s"$dir.ingest.ckpt")
+        IvfIndex.FloatCodec, before, dir, checkpoint = s"$dir.ingest.ckpt")
       ingest.processAllAvailable() // delta fully ingested BEFORE serving
       val outBefore = graft.WorkDirs.dir(s"vecsvc_out_before_$tag")
       val npBefore = IvfIndex.auditNprobe(before.nlist)
       val serve = StreamAnnServe.start(
         spark.readStream.schema(emb.schema).parquet(queryDir),
-        before, dir, outBefore, checkpoint = s"$outBefore.ckpt",
+        IvfIndex.FloatCodec, before, dir, outBefore,
+        checkpoint = s"$outBefore.ckpt",
         k = 20, nprobe = npBefore)
       serve.processAllAvailable() // before-swap answers committed
 
@@ -354,7 +355,8 @@ object VectorService {
       val outAfter = graft.WorkDirs.dir(s"vecsvc_out_after_$tag")
       val serve2 = StreamAnnServe.start(
         spark.readStream.schema(emb.schema).parquet(queryDir),
-        after, dir, outAfter, checkpoint = s"$outAfter.ckpt",
+        IvfIndex.FloatCodec, after, dir, outAfter,
+        checkpoint = s"$outAfter.ckpt",
         k = 20, nprobe = IvfIndex.auditNprobe(after.nlist),
         trigger = Trigger.AvailableNow())
       try serve2.awaitTermination() finally serve2.stop()

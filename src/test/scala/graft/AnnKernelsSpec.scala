@@ -25,6 +25,33 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
     rows.foreach { r => assert(!r.getBoolean(0), s"kernel != reference: $r") }
   }
 
+  /** Run `body` under both expression factory modes: generated code
+    * (whole-stage on) and the interpreted fallback (whole-stage off), so
+    * the two evaluation paths of a kernel cannot drift apart. */
+  private def inBothFactoryModes(body: => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        val keys = Seq("spark.sql.codegen.factoryMode",
+          "spark.sql.codegen.wholeStage")
+        val saved = keys.map(k => k -> spark.conf.getOption(k))
+        spark.conf.set(keys(0), mode)
+        spark.conf.set(keys(1), wholeStage)
+        try body
+        finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
+    }
+
+  /** Normalized fixture vectors plus the same vectors cut to 0, 5, 13
+    * and 63 of 64 dims: a short vector's trailing subspaces are partial or
+    * empty, and the kernels must read only what is there. */
+  private def withShort = {
+    val n = emb.select(PqIndex.normed(col("embedding")).as("_e"))
+    Seq(0, 5, 13, 63).map(len => n.select(slice(col("_e"), 1, len).as("_e")))
+      .foldLeft(n)(_ unionByName _)
+  }
+
   test("l2_normalize == transform reference (incl. zero vector), bit-exact") {
     val withZero = emb.select(col("embedding"))
       .unionByName(Seq(Tuple1(Array.fill(64)(0f))).toDF("embedding"))
@@ -34,17 +61,15 @@ class AnnKernelsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pq_encode == nearestCode/array_sort reference, bit-exact") {
-    val n = emb.select(col("vec_id"), PqIndex.normed(col("embedding")).as("_e"))
-    assertSame(n.select(
+    inBothFactoryModes(assertSame(withShort.select(
       (PqIndex.codesColumn(pqModel, col("_e")) =!=
-        PqIndex.codesColumnReference(pqModel, col("_e"))).as("diff")))
+        PqIndex.codesColumnReference(pqModel, col("_e"))).as("diff"))))
   }
 
   test("adc_tables == dot-literal reference, bit-exact") {
-    val n = emb.select(PqIndex.normed(col("embedding")).as("_e"))
-    assertSame(n.select(
+    inBothFactoryModes(assertSame(withShort.select(
       (PqIndex.adcTablesColumn(pqModel, col("_e")) =!=
-        PqIndex.adcTablesColumnReference(pqModel, col("_e"))).as("diff")))
+        PqIndex.adcTablesColumnReference(pqModel, col("_e"))).as("diff"))))
   }
 
   test("adc_score == aggregate/zip_with reference, bit-exact") {

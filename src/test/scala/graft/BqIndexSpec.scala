@@ -33,7 +33,7 @@ class BqIndexSpec extends AnyFunSuite with SparkTestBase {
     val pairs = Seq((0L, 0x0L, 0x0L), (1L, -1L, -1L), (2L, 0x0L, -1L),
       (3L, 0x5AL, 0x5AL)).toDF("id", "a", "b")
     val got = pairs.select(col("id"),
-      graft.operators.BqIndex.hammingSimForTest(col("a"), col("b")).as("h"))
+      graft.operators.BqIndex.hammingSim(col("a"), col("b")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got(0L) == 64 && got(1L) == 64 && got(2L) == 0 && got(3L) == 64)
   }

@@ -64,7 +64,7 @@ class CliSpec extends AnyFunSuite with SparkTestBase {
 
     // rebuild retrains + swaps + saves the new artifact; the OLD artifact
     // (a stale process's memory) fails the stamp loudly
-    val stale = ModelStore.loadIvfModel(spark, model)
+    val stale = IvfIndex.FloatCodec.load(spark, model)
     assert(stale.fingerprint == b("FINGERPRINT"))
     val rb = go("--action", "rebuild", "--indexDir", idx, "--modelDir", model,
       "--iters", "1")
@@ -72,7 +72,7 @@ class CliSpec extends AnyFunSuite with SparkTestBase {
     // the rebuilt layout re-measures and re-ships its serving decision
     assert(ModelStore.loadServingProbe(spark, model)
       .contains(rb("SERVING_NPROBE").toInt))
-    val e = intercept[IllegalStateException](IvfIndex.searchIndex(spark, idx,
+    val e = intercept[IllegalStateException](IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, idx,
       emb.filter(col("vec_id") < 2), stale, k = 5, nprobe = 2))
     assert(e.getMessage.contains("fingerprint mismatch"))
     // the re-loaded (rebuilt) artifact serves on the new generation
@@ -128,71 +128,79 @@ class CliSpec extends AnyFunSuite with SparkTestBase {
       "--modelDir", model)) == 1)
   }
 
-  test("VectorService CLI: composed bq layout loop; wrong --layout and stale artifact rejected") {
-    import graft.operators.{IvfBqIndex, ModelStore}
-    val base = java.nio.file.Files.createTempDirectory("graft_vsvc_bq").toString
+  test("VectorService CLI: composed bq and pq layout loops; wrong --layout and stale artifact rejected") {
+    import graft.operators.{IvfBqIndex, IvfCodec, IvfIndex, IvfPqIndex, ModelStore}
     val emb = graft.sources.Tables.load(spark, sf001, "embeddings")
       .select("vec_id", "embedding")
-    emb.write.parquet(s"$base/corpus") // the floats serve/rebuild rerank from
-    emb.filter(col("vec_id") % 2 === 0).write.parquet(s"$base/init")
-    emb.filter(col("vec_id") % 2 === 1).write.parquet(s"$base/delta")
-    emb.filter(col("vec_id") < 2).write.parquet(s"$base/queries")
-    val (idx, model) = (s"$base/idx", s"$base/model")
     def go(args: String*) = VectorServiceMain.run(spark, args.toArray)
 
-    // build persists the COMPOSED artifact + a measured serving decision
-    val b = go("--action", "build", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--input", s"$base/init", "--iters", "1")
-    assert(b("LAYOUT") == "bq")
-    assert(ModelStore.loadServingProbe(spark, model)
-      .contains(b("SERVING_NPROBE").toInt))
-    assert(IvfBqIndex.fingerprintOf(ModelStore.loadIvfBqModel(spark, model))
-      == b("FINGERPRINT"))
+    // the same loop for each code layout; `other` is a wrong --layout
+    def loop[M](codec: IvfCodec[M], other: String): Unit = {
+      val layout = codec.name
+      val base = java.nio.file.Files.createTempDirectory(s"graft_vsvc_$layout").toString
+      emb.write.parquet(s"$base/corpus") // the floats serve/rebuild rerank from
+      emb.filter(col("vec_id") % 2 === 0).write.parquet(s"$base/init")
+      emb.filter(col("vec_id") % 2 === 1).write.parquet(s"$base/delta")
+      emb.filter(col("vec_id") < 2).write.parquet(s"$base/queries")
+      val (idx, model) = (s"$base/idx", s"$base/model")
 
-    // the artifact knows its kind: driving it as float (or pq) dies at
-    // the flag tier, before any index data is touched
-    assert(ex(go("--action", "ingest", "--indexDir", idx, "--modelDir", model,
-      "--input", s"$base/delta", "--checkpoint", s"$base/ckptX")) == 1)
-    assert(ex(go("--action", "rebuild", "--layout", "pq", "--indexDir", idx,
-      "--modelDir", model, "--corpus", s"$base/corpus")) == 1)
+      // build persists the COMPOSED artifact + a measured serving decision
+      val b = go("--action", "build", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--input", s"$base/init", "--iters", "1")
+      assert(b("LAYOUT") == layout)
+      assert(ModelStore.loadServingProbe(spark, model)
+        .contains(b("SERVING_NPROBE").toInt))
+      assert(codec.fingerprint(codec.load(spark, model)) == b("FINGERPRINT"))
 
-    // exactly-once composed ingest, re-invocation appends nothing
-    val ing = go("--action", "ingest", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--input", s"$base/delta",
-      "--checkpoint", s"$base/ckpt1")
-    assert(ing("N_TOTAL").toLong == emb.count())
-    val ing2 = go("--action", "ingest", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--input", s"$base/delta",
-      "--checkpoint", s"$base/ckpt1")
-    assert(ing2("N_TOTAL").toLong == emb.count())
+      // the artifact knows its kind: driving it as float (or the other
+      // code layout) dies at the flag tier, before any index data is touched
+      assert(ex(go("--action", "ingest", "--indexDir", idx, "--modelDir", model,
+        "--input", s"$base/delta", "--checkpoint", s"$base/ckptX")) == 1)
+      assert(ex(go("--action", "rebuild", "--layout", other, "--indexDir", idx,
+        "--modelDir", model, "--corpus", s"$base/corpus")) == 1)
 
-    // status is layout-agnostic (code slices share the cell rules)
-    val st = go("--action", "status", "--indexDir", idx, "--modelDir", model)
-    assert(st("N_TOTAL").toLong == emb.count() && st("QUARANTINED") == "0")
+      // exactly-once composed ingest, re-invocation appends nothing
+      val ing = go("--action", "ingest", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--input", s"$base/delta",
+        "--checkpoint", s"$base/ckpt1")
+      assert(ing("N_TOTAL").toLong == emb.count())
+      val ing2 = go("--action", "ingest", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--input", s"$base/delta",
+        "--checkpoint", s"$base/ckpt1")
+      assert(ing2("N_TOTAL").toLong == emb.count())
 
-    // serve reranks from --corpus; answers land as output slices
-    val sv = go("--action", "serve", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--input", s"$base/queries",
-      "--corpus", s"$base/corpus", "--out", s"$base/out",
-      "--checkpoint", s"$base/ckpt2", "--k", "5")
-    assert(sv("N_ANSWERS").toLong == 10)
+      // status is layout-agnostic (code slices share the cell rules)
+      val st = go("--action", "status", "--indexDir", idx, "--modelDir", model)
+      assert(st("N_TOTAL").toLong == emb.count() && st("QUARANTINED") == "0")
 
-    // rebuild retrains the coarse stage from --corpus and swaps; the old
-    // composed artifact fails the stamp loudly
-    val stale = ModelStore.loadIvfBqModel(spark, model)
-    val rb = go("--action", "rebuild", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--corpus", s"$base/corpus", "--iters", "1")
-    assert(rb("REBUILT") == "true" && rb("FINGERPRINT") != b("FINGERPRINT"))
-    val e = intercept[IllegalStateException](
-      IvfBqIndex.searchIndex(spark, idx, emb, emb.filter(col("vec_id") < 2),
-        stale, k = 5, nprobe = 2, r = 20).count())
-    assert(e.getMessage.contains("fingerprint mismatch"))
-    // the re-loaded (rebuilt) artifact serves on the new generation
-    val sv2 = go("--action", "serve", "--layout", "bq", "--indexDir", idx,
-      "--modelDir", model, "--input", s"$base/queries",
-      "--corpus", s"$base/corpus", "--out", s"$base/out2",
-      "--checkpoint", s"$base/ckpt3", "--k", "5")
-    assert(sv2("N_ANSWERS").toLong == 10)
+      // serve reranks from --corpus; answers land as output slices
+      val sv = go("--action", "serve", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--input", s"$base/queries",
+        "--corpus", s"$base/corpus", "--out", s"$base/out",
+        "--checkpoint", s"$base/ckpt2", "--k", "5")
+      assert(sv("N_ANSWERS").toLong == 10)
+
+      // rebuild retrains from --corpus and swaps; the old composed
+      // artifact fails the stamp loudly
+      val stale = codec.load(spark, model)
+      val rb = go("--action", "rebuild", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--corpus", s"$base/corpus", "--iters", "1")
+      assert(rb("REBUILT") == "true" && rb("FINGERPRINT") != b("FINGERPRINT"))
+      val e = intercept[IllegalStateException](
+        IvfIndex.searchIndex(codec, spark, idx, emb.filter(col("vec_id") < 2),
+          stale, k = 5, nprobe = 2, rerank = Some(IvfIndex.Rerank(emb, 20)))
+          .count())
+      assert(e.getMessage.contains("fingerprint mismatch"))
+      // the re-loaded (rebuilt) artifact serves on the new generation
+      val sv2 = go("--action", "serve", "--layout", layout, "--indexDir", idx,
+        "--modelDir", model, "--input", s"$base/queries",
+        "--corpus", s"$base/corpus", "--out", s"$base/out2",
+        "--checkpoint", s"$base/ckpt3", "--k", "5")
+      assert(sv2("N_ANSWERS").toLong == 10)
+    }
+
+    loop(IvfBqIndex.Codec, other = "pq")
+    loop(IvfPqIndex.GlobalCodec, other = "bq")
   }
 
   test("VectorService CLI: --corpus is witness-bound — a wrong table dies before touching the index") {
@@ -221,14 +229,13 @@ class CliSpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains("corpus witness mismatch"))
     // ...and a rebuild against the wrong table dies BEFORE retraining:
     // the artifact's fingerprint is unchanged afterwards
-    val fpBefore = graft.operators.IvfBqIndex.fingerprintOf(
-      ModelStore.loadIvfBqModel(spark, model))
+    val bq = graft.operators.IvfBqIndex.Codec
+    val fpBefore = bq.fingerprint(bq.load(spark, model))
     val e2 = intercept[IllegalStateException](
       go("--action", "rebuild", "--layout", "bq", "--indexDir", idx,
         "--modelDir", model, "--corpus", s"$base/wrong", "--iters", "1"))
     assert(e2.getMessage.contains("corpus witness mismatch"))
-    assert(graft.operators.IvfBqIndex.fingerprintOf(
-      ModelStore.loadIvfBqModel(spark, model)) == fpBefore)
+    assert(bq.fingerprint(bq.load(spark, model)) == fpBefore)
     // the true corpus — an ingest-grown SUPERSET of the build input —
     // passes the witness and serves
     val sv = go("--action", "serve", "--layout", "bq", "--indexDir", idx,
@@ -377,14 +384,14 @@ class CliSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 4, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_doctor").toString + "/idx"
-    IvfIndex.writeIndex(emb, model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, dir)
     val healthy = IndexDoctorMain.run(spark,
       Array("--indexDir", dir, "--maxSkew", "50.0"))
     assert(healthy.nCells == 4 && !healthy.drifted && !healthy.rebuilt)
     // skew the index: re-append ONE cell's own vectors five times over
     val cell0 = IvfIndex.assign(emb, model)
       .filter(col("cell") === 0).select("vec_id", "embedding")
-    (1 to 5).foreach(_ => IvfIndex.appendToIndex(cell0, model, dir))
+    (1 to 5).foreach(_ => IvfIndex.appendToIndex(IvfIndex.FloatCodec, cell0, model, dir))
     val sick = IndexDoctorMain.run(spark,
       Array("--indexDir", dir, "--maxSkew", "1.5"))
     assert(sick.drifted, s"expected drift at skew ${sick.skew}")

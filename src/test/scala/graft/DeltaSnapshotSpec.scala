@@ -18,13 +18,13 @@ class DeltaSnapshotSpec extends AnyFunSuite with SparkTestBase {
     val m = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_dsnap").toString
     val idx = s"$base/idx"
-    IvfIndex.writeIndex(emb.filter(col("vec_id") < 400), m, idx)
-    IvfIndex.appendToIndex(emb.filter(col("vec_id") >= 400), m, idx)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") < 400), m, idx)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") >= 400), m, idx)
     val q = emb.filter(col("vec_id") < 2)
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Long]("rank"))).toSet
-    val expected = keyed(IvfIndex.searchIndex(spark, idx, q, m, k = 5, nprobe = 3))
+    val expected = keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, idx, q, m, k = 5, nprobe = 3))
 
     // quarantined evidence is NOT live data — it must not enter a snapshot
     DeltaLayout.writeMarker(spark,
@@ -40,12 +40,12 @@ class DeltaSnapshotSpec extends AnyFunSuite with SparkTestBase {
     val idx2 = s"$base/restored1"
     DeltaSnapshot.restore(spark, snap1, idx2)
     assert(IvfIndex.layoutFingerprint(spark, idx2).contains(m.fingerprint))
-    assert(keyed(IvfIndex.searchIndex(spark, idx2, q, m, k = 5, nprobe = 3))
+    assert(keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, idx2, q, m, k = 5, nprobe = 3))
       == expected, "a restored index must serve exactly like the original")
 
     // incremental: a new slice lands; the second snapshot physically
     // ships ONLY it, but restores completely from its own manifest
-    IvfIndex.appendToIndex(
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec,
       emb.filter(col("vec_id") < 50)
         .select((col("vec_id") + 8000L).as("vec_id"), col("embedding")),
       m, idx)

@@ -59,7 +59,7 @@ class FloatOracleDeterminismSpec extends AnyFunSuite with SparkTestBase {
         canon(IvfIndex.clusterProfiles(corpus, model)),
         canon(IvfIndex.outliers(corpus, model, minCos = 0.25)
           .select("vec_id", "cell", "centroid_cos")),
-        canon(IvfIndex.search(IvfIndex.assign(corpus, model),
+        canon(IvfIndex.search(IvfIndex.FloatCodec, IvfIndex.assign(corpus, model),
           corpus.filter(col("vec_id") < 5), model, k = 20, nprobe = 2)))
     }
     assert(results.distinct.size == 1,

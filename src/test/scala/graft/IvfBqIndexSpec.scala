@@ -20,7 +20,7 @@ class IvfBqIndexSpec extends AnyFunSuite with SparkTestBase {
   test("full probe == flat BQ at the same rescore pool; layout rows are the encode") {
     val model = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfbq").toString
-    IvfBqIndex.writeIndex(emb, model, dir)
+    IvfIndex.writeIndex(IvfBqIndex.Codec, emb, model, dir)
     // the persisted rows are exactly (vec_id, cell-of-assignment, code)
     val stored = IvfIndex.readIndex(spark, dir)
       .select(col("vec_id"), col("cell"), col("code")).collect()
@@ -38,8 +38,9 @@ class IvfBqIndexSpec extends AnyFunSuite with SparkTestBase {
     // probing EVERY cell removes the prune: the composed search must
     // equal the flat Hamming+rerank pipeline at the same pool
     val queries = emb.filter(col("vec_id") < 3)
-    val full = keyed(IvfBqIndex.searchIndex(spark, dir, emb, queries, model,
-      k = 10, nprobe = 4, r = 50))
+    val full = keyed(IvfIndex.searchIndex(IvfBqIndex.Codec, spark, dir,
+      queries, model, k = 10, nprobe = 4,
+      rerank = Some(IvfIndex.Rerank(emb, 50))))
     val flat = keyed(BqIndex.searchWithRerank(emb, queries, k = 10, r = 50))
     assert(full == flat, "full-probe composed search must equal flat BQ")
   }
@@ -47,7 +48,7 @@ class IvfBqIndexSpec extends AnyFunSuite with SparkTestBase {
   test("stamp separates code and float layouts; probed-pool scaling; pack recall floor") {
     val model = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfbq_fp").toString
-    IvfBqIndex.writeIndex(emb, model, dir)
+    IvfIndex.writeIndex(IvfBqIndex.Codec, emb, model, dir)
     // a float-index reader (the raw coarse fingerprint) must not pass
     // the stamp check against the code layout
     val e = intercept[IllegalStateException] {
@@ -55,15 +56,15 @@ class IvfBqIndexSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(e.getMessage.contains("fingerprint mismatch"))
     // composed stamp passes; append lands a stamped slice
-    IvfBqIndex.appendToIndex(
+    IvfIndex.appendToIndex(IvfBqIndex.Codec,
       emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + 900000L).as("vec_id"), col("embedding")),
       model, dir)
     assert(IvfIndex.readIndex(spark, dir).count() == emb.count() + 5)
 
     // pool tracks the probed mass with the flat tier's floor of 100
-    assert(IvfBqIndex.scaledProbedPool(4000L, 8, 2) == 100)
-    assert(IvfBqIndex.scaledProbedPool(1000000L, 256, 16) ==
+    assert(IvfIndex.scaledProbedPool(4000L, 8, 2) == 100)
+    assert(IvfIndex.scaledProbedPool(1000000L, 256, 16) ==
       (1000000L * 16 / 256 / 20).toInt)
 
     // the pack adapter clears the gate floor at the fixture scale

@@ -51,7 +51,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Long]("rank"))).toSet
-    val full = key(IvfIndex.searchFiltered(IvfIndex.assign(emb, model),
+    val full = key(IvfIndex.search(IvfIndex.FloatCodec, IvfIndex.assign(emb, model),
       queries, model, k = 10, nprobe = 4,
       pred = col("label") === col("query_label")))
     val exact = key(graft.operators.Similarity.filteredTopK(emb, queries,
@@ -62,8 +62,8 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     // keeps dynamic partition pruning on cell (only probed directories
     // open) and pushes the corpus-side label conjunct into the scan
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_filt").toString
-    IvfIndex.writeIndex(emb, model, dir)
-    val plan = IvfIndex.searchIndexFiltered(spark, dir, queries, model,
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, dir)
+    val plan = IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, queries, model,
         k = 10, nprobe = 2, pred = col("label") === col("query_label"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"),
@@ -111,7 +111,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")) -> r.getAs[Double]("cosine"))
       .toMap
     // full probe == exact top-k
-    val full = IvfIndex.search(assigned, queries, model, k = 10, nprobe = 4).collect()
+    val full = IvfIndex.search(IvfIndex.FloatCodec, assigned, queries, model, k = 10, nprobe = 4).collect()
     assert(full.length == 30)
     full.foreach { r =>
       val key = (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))
@@ -119,7 +119,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       assert(math.abs(exact(key) - r.getAs[Double]("cosine")) < 1e-9)
     }
     // partial probe: a subset of cells, still k results per query, exact scores
-    val partial = IvfIndex.search(assigned, queries, model, k = 10, nprobe = 2)
+    val partial = IvfIndex.search(IvfIndex.FloatCodec, assigned, queries, model, k = 10, nprobe = 2)
       .collect()
     assert(partial.nonEmpty)
     partial.foreach { r =>
@@ -132,19 +132,19 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 8, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    IvfIndex.writeIndex(emb, model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, dir)
     // physical layout: one directory per cell inside the base slice
     val cellDirs = new java.io.File(s"$dir/delta=base").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty && cellDirs.length <= 8)
 
     val queries = emb.filter(col("vec_id") < 3)
-    val viaIndex = IvfIndex.searchIndex(spark, dir, queries, model, k = 10, nprobe = 2)
+    val viaIndex = IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, queries, model, k = 10, nprobe = 2)
     // dynamic partition pruning: unprobed cell directories are never read
     val plan = viaIndex.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"), s"expected DPP partition filter in:\n$plan")
     // identical results to the in-memory assignment path
-    val direct = IvfIndex.search(IvfIndex.assign(emb, model), queries, model, k = 10, nprobe = 2)
+    val direct = IvfIndex.search(IvfIndex.FloatCodec, IvfIndex.assign(emb, model), queries, model, k = 10, nprobe = 2)
     val ix = viaIndex.collect().map(r =>
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSet
     val dx = direct.collect().map(r =>
@@ -158,14 +158,14 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val old = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 =!= 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
-    IvfIndex.writeIndex(old, model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, old, model, dir)
     def leaves() = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(new java.io.File(dir)).map(_.getAbsolutePath).toSet
     }
     val filesBefore = leaves()
-    IvfIndex.appendToIndex(delta, model, dir)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, delta, model, dir)
     // append lands as a NEW slice, never rewriting the old files
     val filesAfter = leaves()
     assert(filesBefore.subsetOf(filesAfter) && filesAfter.size > filesBefore.size)
@@ -177,9 +177,9 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))).toSet
     val fresh = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
-    IvfIndex.writeIndex(emb, model, fresh)
-    assert(keyed(IvfIndex.searchIndex(spark, dir, queries, model, k = 10, nprobe = 3))
-      == keyed(IvfIndex.searchIndex(spark, fresh, queries, model, k = 10, nprobe = 3)))
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, fresh)
+    assert(keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, queries, model, k = 10, nprobe = 3))
+      == keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, fresh, queries, model, k = 10, nprobe = 3)))
   }
 
   test("streaming vector ingest: micro-batches append into the live IVF index") {
@@ -187,7 +187,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val model = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = emb.filter(col("vec_id") % 2 === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
-    IvfIndex.writeIndex(base, model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, base, model, dir)
     // stage the delta as TWO files → two micro-batches through the stream
     val staging = java.nio.file.Files.createTempDirectory("graft_ivf_staging").toString
     emb.filter(col("vec_id") % 4 === 1).coalesce(1).write.parquet(s"$staging/b1")
@@ -198,7 +198,8 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       .option("maxFilesPerTrigger", 1)
       .option("recursiveFileLookup", "true")
       .parquet(staging)
-    val q = graft.streaming.VectorIngest.start(stream, model, dir, ckpt)
+    val q = graft.streaming.VectorIngest.start(stream, IvfIndex.FloatCodec, model, dir,
+      ckpt)
     try q.processAllAvailable() finally q.stop()
     // every vector landed exactly once; footer stats see the appends
     assert(IvfIndex.cellStats(spark, dir)
@@ -209,9 +210,9 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))).toSet
     val fresh = java.nio.file.Files.createTempDirectory("graft_ivf_sfresh").toString
-    IvfIndex.writeIndex(emb, model, fresh)
-    assert(keyed(IvfIndex.searchIndex(spark, dir, queries, model, k = 10, nprobe = 3))
-      == keyed(IvfIndex.searchIndex(spark, fresh, queries, model, k = 10, nprobe = 3)))
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, fresh)
+    assert(keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, queries, model, k = 10, nprobe = 3))
+      == keyed(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, fresh, queries, model, k = 10, nprobe = 3)))
   }
 
   test("IVF drift: skewed appends flag the report, rebuild restores balance") {
@@ -219,7 +220,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 8, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_drift").toString
-    IvfIndex.writeIndex(emb, model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, dir)
 
     // footer stats agree with the data before anything drifts
     val stats0 = IvfIndex.cellStats(spark, dir)
@@ -238,7 +239,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
           col("embedding")))
       .reduce(_ unionByName _)
     val copies = delta.count()
-    IvfIndex.appendToIndex(delta, model, dir)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, delta, model, dir)
 
     val report1 = IvfIndex.driftReport(spark, dir, maxSkew = 3.0).head()
     assert(report1.getAs[Boolean]("drifted"),
@@ -247,7 +248,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
 
     // rebuild: retrains on base+delta, rewrites the layout, returns the
     // new model; the mega-cell splits so skew drops back under the alarm
-    val rebuilt = IvfIndex.rebuildIndex(spark, dir, nlist = 8, iters = 2)
+    val rebuilt = IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, dir, nlist = 8, iters = 2)
     val report2 = IvfIndex.driftReport(spark, dir, maxSkew = 3.0).head()
     assert(!report2.getAs[Boolean]("drifted"),
       s"rebuild must restore balance: $report2")
@@ -262,7 +263,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))).toSet
     assert(
-      keyed2(IvfIndex.searchIndex(spark, dir, queries, rebuilt, k = 10, nprobe = 8))
+      keyed2(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, queries, rebuilt, k = 10, nprobe = 8))
         == keyed2(Similarity.bruteForceTopK(union, queries, k = 10)))
   }
 
@@ -271,8 +272,8 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_crash").toString
-    IvfIndex.writeIndex(emb, model, dir)
-    IvfIndex.appendToIndex(emb.filter(col("vec_id") < 7)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, dir)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") < 7)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")), model, dir)
     val before = IvfIndex.cellStats(spark, dir).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -293,7 +294,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
 
     // resuming the rebuild from that crash state succeeds (stale staging
     // is cleared, the fold commits atomically, folded slices are GC'd)
-    val rebuilt = IvfIndex.rebuildIndex(spark, dir, nlist = 4, iters = 1)
+    val rebuilt = IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, dir, nlist = 4, iters = 1)
     assert(IvfIndex.readIndex(spark, dir).count() == total)
 
     // crash window B: fold committed, GC never ran — the new generation
@@ -307,7 +308,7 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(IvfIndex.readIndex(spark, dir).count() == total,
       "slices at or below the committed generation must stay folded")
     // and searches through the recovered index still answer
-    assert(IvfIndex.searchIndex(spark, dir, emb.filter(col("vec_id") < 2),
+    assert(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, emb.filter(col("vec_id") < 2),
       rebuilt, k = 5, nprobe = 4).count() > 0)
   }
 
@@ -315,23 +316,23 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_once").toString
-    IvfIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), model, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 === 0), model, dir)
     val delta = emb.filter(col("vec_id") % 2 =!= 0)
       .select("vec_id", "embedding")
     def pops() = IvfIndex.cellStats(spark, dir).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-    assert(IvfIndex.appendToIndex(delta, model, dir, batchId = 0L),
+    assert(IvfIndex.appendToIndex(IvfIndex.FloatCodec, delta, model, dir, batchId = 0L),
       "first delivery of batch 0 must append")
     val after = pops()
     // the foreachBatch replay scenario: same batch id re-delivered after
     // a crash before the checkpoint commit — the slice already exists,
     // so the replay writes NOTHING and populations are unchanged
-    assert(!IvfIndex.appendToIndex(delta, model, dir, batchId = 0L),
+    assert(!IvfIndex.appendToIndex(IvfIndex.FloatCodec, delta, model, dir, batchId = 0L),
       "replay of batch 0 must be a no-op")
     assert(pops() == after, "a replayed batch must not change populations")
     // a NEW batch id still appends
-    assert(IvfIndex.appendToIndex(delta.limit(3)
+    assert(IvfIndex.appendToIndex(IvfIndex.FloatCodec, delta.limit(3)
       .select((col("vec_id") + 200000L).as("vec_id"), col("embedding")),
       model, dir, batchId = 1L))
     assert(pops().values.sum == after.values.sum + 3)
@@ -455,8 +456,8 @@ class IvfSessionSpec extends AnyFunSuite with SparkTestBase {
     val emb = Tables.load(spark, sf001, "embeddings")
     val model = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_orphan").toString
-    IvfIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), model, dir)
-    IvfIndex.appendToIndex(emb.filter(col("vec_id") % 2 =!= 0)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 === 0), model, dir)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 =!= 0)
       .select("vec_id", "embedding"), model, dir, batchId = 0L)
     // the slice carries the WRITER's model fingerprint, atomic with its
     // rename — the durable half of the append/rebuild race closure

@@ -41,26 +41,27 @@ class ModelStoreSpec extends AnyFunSuite with SparkTestBase {
     // IVF-PQ, residual flavor too: the flag changes what a code MEANS,
     // so it must survive the artifact (it feeds the fingerprint)
     val mPq = IvfPqIndex.train(emb, nlist = 8, coarseIters = 1, pqIters = 1)
-    ModelStore.saveIvfPqModel(spark, mPq, dir)
-    val loadedPq = ModelStore.loadIvfPqModel(spark, dir)
+    IvfPqIndex.GlobalCodec.save(spark, mPq, dir)
+    val loadedPq = IvfPqIndex.GlobalCodec.load(spark, dir)
     assert(loadedPq.fingerprint == mPq.fingerprint,
       "IVF-PQ fingerprint must survive the round-trip float-bit-exactly")
     assert(!loadedPq.residual)
     val mRes = IvfPqIndex.train(emb, nlist = 8, coarseIters = 1, pqIters = 1,
       residual = true)
     val dirRes = java.nio.file.Files.createTempDirectory("graft-mres").toString
-    ModelStore.saveIvfPqModel(spark, mRes, dirRes)
-    val loadedRes = ModelStore.loadIvfPqModel(spark, dirRes)
+    IvfPqIndex.ResidualCodec.save(spark, mRes, dirRes)
+    val loadedRes = IvfPqIndex.ResidualCodec.load(spark, dirRes)
     assert(loadedRes.residual &&
       loadedRes.fingerprint == mRes.fingerprint)
 
     // IVF-BQ: the model is the coarse quantizer; the composed layout
     // stamp derives from it — both must survive
     val coarse = IvfIndex.train(emb, nlist = 8, iters = 1)
-    ModelStore.saveIvfBqModel(spark, coarse, dir)
-    val loadedBq = ModelStore.loadIvfBqModel(spark, dir)
+    IvfBqIndex.Codec.save(spark, coarse, dir)
+    val loadedBq = IvfBqIndex.Codec.load(spark, dir)
     assert(loadedBq.fingerprint == coarse.fingerprint)
-    assert(IvfBqIndex.fingerprintOf(loadedBq) == IvfBqIndex.fingerprintOf(coarse))
+    assert(IvfBqIndex.Codec.fingerprint(loadedBq) ==
+      IvfBqIndex.Codec.fingerprint(coarse))
 
     // OPQ: rotation + books, float-bit equality (no fingerprint field)
     val mOpq = OpqIndex.train(spark, sf001, emb, iters = 1)
@@ -75,6 +76,27 @@ class ModelStoreSpec extends AnyFunSuite with SparkTestBase {
     val dirCb = java.nio.file.Files.createTempDirectory("graft-mcb").toString
     ModelStore.savePqCodebooks(spark, cb, dirCb)
     assert(ModelStore.loadPqCodebooks(spark, dirCb) == cb)
+  }
+
+  test("layout stamps are pinned: float, bq, pq and pq-residual fingerprint bytes") {
+    import graft.operators.{IvfBqIndex, IvfIndex, IvfPqIndex, PqIndex}
+    // fixed tiny models, no training: every persisted index carries these
+    // stamps, so any change to how a layout hashes its model must show here
+    val coarse = IvfIndex.Model(Seq(Seq(0.6f, 0.8f, 0f, 0f),
+      Seq(0f, 0f, -1f, 0.5f)))
+    val books = PqIndex.Codebooks(dim = 4, m = 2, books = Seq(
+      Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(0.5f, -0.5f)),
+      Seq(Seq(0.25f, 0.75f), Seq(-1f, 0f), Seq(0f, 0f))))
+    assert(IvfIndex.FloatCodec.fingerprint(coarse) ==
+      "eeb823ae54bf0485fe90dc148a8bca1b6de638adb17610606e25e65445216758")
+    assert(IvfBqIndex.Codec.fingerprint(coarse) ==
+      "37766ae028d62687ae639e05f151051ab4790a2ea9b188308c2c0bb737283466")
+    assert(IvfPqIndex.GlobalCodec.fingerprint(
+      IvfPqIndex.Model(coarse, books)) ==
+      "0587ff3dd09bb05cddc91394eb4b684d09ee107736ba2ed9b945aeef732c7e66")
+    assert(IvfPqIndex.ResidualCodec.fingerprint(
+      IvfPqIndex.Model(coarse, books, residual = true)) ==
+      "adceb604ff2b3e090173fe589152e6b1812f5397a571b4ca63266310f87ef77a")
   }
 
   test("corpus witness: superset passes, perturbed/missing rows die, absent witness tolerated") {

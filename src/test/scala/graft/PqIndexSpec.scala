@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfPqIndex, PqIndex, Similarity, SqIndex}
+import graft.operators.{IvfIndex, IvfPqIndex, PqIndex, Similarity, SqIndex}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -58,7 +58,7 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
     val composed = IvfPqIndex.Model(
       graft.operators.IvfIndex.train(emb, nlist = 8, iters = 2), model)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    IvfPqIndex.writeIndex(emb, composed, dir)
+    IvfIndex.writeIndex(IvfPqIndex.GlobalCodec, emb, composed, dir)
     // physical layout: one directory of CODES per cell inside the base
     // slice (no float vectors)
     val cellDirs = new java.io.File(s"$dir/delta=base").listFiles()
@@ -71,15 +71,17 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
 
     // nprobe = nlist ⇒ candidate set is the whole corpus ⇒ the composed
     // search degenerates to flat ADC + rerank, bit-for-bit
-    val full = IvfPqIndex.searchIndex(spark, dir, emb, queries, composed,
-      k = 10, nprobe = 8, r = 50)
+    val full = IvfIndex.searchIndex(IvfPqIndex.GlobalCodec, spark, dir,
+      queries, composed, k = 10, nprobe = 8,
+      rerank = Some(IvfIndex.Rerank(emb, 50)))
     val flat = PqIndex.searchWithRerank(emb, queries, model, k = 10, r = 50)
     assert(keyed(full.collect()) == keyed(flat.collect()))
 
     // partial probe: cell-pruned ADC — plan carries a DPP partition filter,
     // rerank cosines stay exact, recall stays above random
-    val part = IvfPqIndex.searchIndex(spark, dir, emb, queries, composed,
-      k = 10, nprobe = 2, r = 50)
+    val part = IvfIndex.searchIndex(IvfPqIndex.GlobalCodec, spark, dir,
+      queries, composed, k = 10, nprobe = 2,
+      rerank = Some(IvfIndex.Rerank(emb, 50)))
     val plan = part.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"), s"expected DPP partition filter in:\n$plan")
     val rows = part.collect()
@@ -121,12 +123,15 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
         coarseIters = 2, pqIters = 2, residual = residual)
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_ivfpq_res_$residual").toString
-      IvfPqIndex.writeIndex(corpus, m, dir)
+      val codec =
+        if (residual) IvfPqIndex.ResidualCodec else IvfPqIndex.GlobalCodec
+      IvfIndex.writeIndex(codec, corpus, m, dir)
       // full probe + small rerank pool: with the candidate pool barely
       // above k, recall is decided by ADC fidelity — the thing residual
       // codes improve
-      val got = IvfPqIndex.searchIndex(spark, dir, corpus, queries, m,
-        k = 10, nprobe = 8, r = 12).collect()
+      val got = IvfIndex.searchIndex(codec, spark, dir, queries, m,
+          k = 10, nprobe = 8,
+          rerank = Some(IvfIndex.Rerank(corpus, 12))).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
       (got & gt).size.toDouble / gt.size
     }
@@ -171,7 +176,7 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
     val composed = IvfPqIndex.train(emb, nlist = 8, dim = 64, m = 8, k = 16,
       coarseIters = 2, pqIters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_maint").toString
-    IvfPqIndex.writeIndex(emb, composed, dir)
+    IvfIndex.writeIndex(IvfPqIndex.GlobalCodec, emb, composed, dir)
 
     // the IVF footer readers work unchanged on the CODE layout
     import graft.operators.IvfIndex
@@ -187,23 +192,24 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
         donors.select((col("vec_id") + lit(100000L * c)).as("vec_id"),
           col("embedding")))
       .reduce(_ unionByName _)
-    IvfPqIndex.appendToIndex(delta, composed, dir)
+    IvfIndex.appendToIndex(IvfPqIndex.GlobalCodec, delta, composed, dir)
     assert(IvfIndex.driftReport(spark, dir, maxSkew = 3.0).head()
       .getAs[Boolean]("drifted"))
 
     // rebuild on the grown corpus: balance restored, full probe with a
     // corpus-sized rerank pool reproduces brute force exactly
     val union = emb.select("vec_id", "embedding").unionByName(delta)
-    val rebuilt = IvfPqIndex.rebuildIndex(spark, dir, union, nlist = 8,
-      coarseIters = 2, pqIters = 2)
+    val rebuilt = IvfIndex.rebuildIndex(IvfPqIndex.GlobalCodec, spark, dir,
+      nlist = 8, iters = 2, corpus = Some(union))
     assert(!IvfIndex.driftReport(spark, dir, maxSkew = 3.0).head()
       .getAs[Boolean]("drifted"))
     val queries = emb.filter(col("vec_id") < 3)
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))).toSet
-    val full = IvfPqIndex.searchIndex(spark, dir, union, queries, rebuilt,
-      k = 10, nprobe = 8, r = union.count().toInt)
+    val full = IvfIndex.searchIndex(IvfPqIndex.GlobalCodec, spark, dir,
+      queries, rebuilt, k = 10, nprobe = 8,
+      rerank = Some(IvfIndex.Rerank(union, union.count().toInt)))
     assert(keyed(full.collect()) ==
       keyed(Similarity.bruteForceTopK(union, queries, k = 10).collect()))
   }

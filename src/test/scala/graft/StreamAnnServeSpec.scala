@@ -21,7 +21,7 @@ class StreamAnnServeSpec extends AnyFunSuite with SparkTestBase {
     val model = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_serve").toString
     val (idx, out, ckpt) = (s"$base/idx", s"$base/out", s"$base/ckpt")
-    IvfIndex.writeIndex(emb, model, idx)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, model, idx)
 
     // queries staged as TWO files → two micro-batches through the stream
     val staging = s"$base/queries"
@@ -33,16 +33,18 @@ class StreamAnnServeSpec extends AnyFunSuite with SparkTestBase {
       .option("maxFilesPerTrigger", 1)
       .option("recursiveFileLookup", "true")
       .parquet(staging)
-    val q = StreamAnnServe.start(stream, model, idx, out, ckpt, k = 10, nprobe = 3)
+    val q = StreamAnnServe.start(stream, IvfIndex.FloatCodec, model, idx, out, ckpt,
+      k = 10, nprobe = 3)
     try q.processAllAvailable() finally q.stop()
 
     val served = StreamAnnServe.results(spark, out).drop("batch_id")
-    val batch = IvfIndex.searchIndex(spark, idx, queries, model, k = 10, nprobe = 3)
+    val batch = IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, idx, queries, model, k = 10, nprobe = 3)
     assert(keyed(served) == keyed(batch),
       "streamed serving must answer exactly like the batch probe")
 
     // at-least-once replay of an already-committed result batch: no-op
-    StreamAnnServe.serveBatch(spark, model, idx, out, k = 10, nprobe = 3)(
+    StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, model, idx,
+      out, k = 10, nprobe = 3)(
       queries.filter(col("vec_id") < 2), 0L)
     assert(keyed(StreamAnnServe.results(spark, out).drop("batch_id")) == keyed(batch))
 
@@ -54,10 +56,11 @@ class StreamAnnServeSpec extends AnyFunSuite with SparkTestBase {
     VectorIngest.start(
       { val s = s"$base/dupstage"; dup.coalesce(1).write.parquet(s)
         spark.readStream.schema(dup.schema).parquet(s) },
-      model, idx, s"$base/dupckpt") match {
+      IvfIndex.FloatCodec, model, idx, s"$base/dupckpt") match {
       case iq => try iq.processAllAvailable() finally iq.stop()
     }
-    StreamAnnServe.serveBatch(spark, model, idx, out, k = 10, nprobe = 3)(
+    StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, model, idx,
+      out, k = 10, nprobe = 3)(
       queries.filter(col("vec_id") === 0L), 99L)
     val late = StreamAnnServe.results(spark, out)
       .filter(col("batch_id") === 99L && col("rank") === 1L).head()
@@ -80,10 +83,12 @@ class StreamAnnServeSpec extends AnyFunSuite with SparkTestBase {
     // guarded: an answer slice landing after the fold's snapshot aborts
     // loudly — nothing folded, nothing swept (the engine-wide rule)
     import graft.streaming.DeltaLayout
-    StreamAnnServe.serveBatch(spark, model, idx, out, k = 10, nprobe = 3)(
+    StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, model, idx,
+      out, k = 10, nprobe = 3)(
       queries.filter(col("vec_id") === 1L), 100L)
     val snap = DeltaLayout.liveDirs(spark, out) // base + b100
-    StreamAnnServe.serveBatch(spark, model, idx, out, k = 10, nprobe = 3)(
+    StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, model, idx,
+      out, k = 10, nprobe = 3)(
       queries.filter(col("vec_id") === 2L), 101L)
     val e = intercept[IllegalStateException](
       DeltaLayout.compactConcatFrom(spark, out, snap))

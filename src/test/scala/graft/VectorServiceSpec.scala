@@ -18,29 +18,29 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
   test("stale model fails loudly after rebuild; fresh model and legacy layouts pass") {
     val a = IvfIndex.train(emb, nlist = 8, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
-    IvfIndex.writeIndex(emb, a, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, a, dir)
     val q = emb.filter(col("vec_id") < 2)
     // pre-rebuild: the stamped fingerprint matches the builder's model
     assert(IvfIndex.layoutFingerprint(spark, dir).contains(a.fingerprint))
-    assert(IvfIndex.searchIndex(spark, dir, q, a, k = 5, nprobe = 2).count() == 10)
+    assert(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, q, a, k = 5, nprobe = 2).count() == 10)
 
     // rebuild on a skewed superset → centroids move, fingerprint changes
-    IvfIndex.appendToIndex(
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec,
       emb.select((col("vec_id") + 5000L).as("vec_id"), col("embedding"),
         col("label")), a, dir)
-    val b = IvfIndex.rebuildIndex(spark, dir, nlist = 8, iters = 2)
+    val b = IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, dir, nlist = 8, iters = 2)
     assert(b.fingerprint != a.fingerprint)
     assert(IvfIndex.layoutFingerprint(spark, dir).contains(b.fingerprint))
 
     // stale model: search AND append both fail loudly, naming the stamp
     val eSearch = intercept[IllegalStateException](
-      IvfIndex.searchIndex(spark, dir, q, a, k = 5, nprobe = 2))
+      IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, q, a, k = 5, nprobe = 2))
     assert(eSearch.getMessage.contains("fingerprint mismatch"))
     val eAppend = intercept[IllegalStateException](
-      IvfIndex.appendToIndex(emb.limit(1), a, dir))
+      IvfIndex.appendToIndex(IvfIndex.FloatCodec, emb.limit(1), a, dir))
     assert(eAppend.getMessage.contains("fingerprint mismatch"))
     // the model the rebuild returned serves normally
-    assert(IvfIndex.searchIndex(spark, dir, q, b, k = 5, nprobe = 2).count() == 10)
+    assert(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, q, b, k = 5, nprobe = 2).count() == 10)
 
     // legacy layout (no stamp — pre-round-15 index): check is skipped
     val base = IvfIndex.layoutFingerprint(spark, dir)
@@ -49,7 +49,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
       .map(_.getPath).find(p => p.getName.startsWith("delta=base")).get
     assert(fs.delete(new org.apache.hadoop.fs.Path(baseDir, IvfIndex.ModelFpFile), false))
     assert(IvfIndex.layoutFingerprint(spark, dir).isEmpty && base.nonEmpty)
-    assert(IvfIndex.searchIndex(spark, dir, q, a, k = 5, nprobe = 2).count() == 10)
+    assert(IvfIndex.searchIndex(IvfIndex.FloatCodec, spark, dir, q, a, k = 5, nprobe = 2).count() == 10)
   }
 
   test("composed IVF-PQ stamp covers both stages") {
@@ -57,18 +57,18 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     val pq = PqIndex.train(emb, dim = 64, m = 8, k = 16, iters = 2)
     val m1 = IvfPqIndex.Model(coarse, pq)
     val dir = java.nio.file.Files.createTempDirectory("graft_fp_pq").toString
-    IvfPqIndex.writeIndex(emb, m1, dir)
+    IvfIndex.writeIndex(IvfPqIndex.GlobalCodec, emb, m1, dir)
     val q = emb.filter(col("vec_id") < 2)
-    assert(IvfPqIndex.searchIndex(spark, dir, emb, q, m1,
-      k = 5, nprobe = 8, r = 20).count() == 10)
+    assert(IvfIndex.searchIndex(IvfPqIndex.GlobalCodec, spark, dir, q, m1,
+      k = 5, nprobe = 8, rerank = Some(IvfIndex.Rerank(emb, 20))).count() == 10)
     // same coarse stage, different CODEBOOKS → different stamp → loud
     val pq2 = PqIndex.train(emb.filter(col("vec_id") % 2 === 0),
       dim = 64, m = 8, k = 16, iters = 2)
     val m2 = IvfPqIndex.Model(coarse, pq2)
     assert(m2.fingerprint != m1.fingerprint)
     val e = intercept[IllegalStateException](
-      IvfPqIndex.searchIndex(spark, dir, emb, q, m2, k = 5, nprobe = 8, r = 20)
-        .count())
+      IvfIndex.searchIndex(IvfPqIndex.GlobalCodec, spark, dir, q, m2, k = 5,
+        nprobe = 8, rerank = Some(IvfIndex.Rerank(emb, 20))).count())
     assert(e.getMessage.contains("fingerprint mismatch"))
   }
 
@@ -130,7 +130,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     val a = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_maint").toString
     val dir = s"$base/idx"
-    IvfIndex.writeIndex(emb, a, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb, a, dir)
     def policy() = VectorService.rebuildPolicyFromCounts(
       IvfIndex.cellStats(spark, dir).withColumnRenamed("n_vectors", "n"),
       dir).head()
@@ -157,7 +157,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
       .orderBy(col("count").desc, col("cell").asc)
       .limit(1).head().getAs[Int]("cell")
     IvfIndex.RebuildDeltaOffsets.foreach { off =>
-      IvfIndex.appendToIndex(
+      IvfIndex.appendToIndex(IvfIndex.FloatCodec,
         assigned.filter(col("cell") === donorCell)
           .select((col("vec_id") + off).as("vec_id"), col("embedding")),
         current, dir)
@@ -181,7 +181,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
   test("rebuild guards against its TRAINING-time snapshot: a slice landing after it aborts loudly, nothing lost") {
     val a = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_rebuild_race").toString
-    IvfIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), a, dir)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 === 0), a, dir)
     // the rebuild fixes its input HERE (rebuildIndex's pre-training
     // snapshot); a slice appended at any later point — i.e. during the
     // long training window — must abort the commit, not be counted into
@@ -189,7 +189,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     // round-16 guards compared against a post-training listing, which
     // silently folded exactly this interleaving)
     val snapshot = IvfIndex.liveSliceDirs(spark, dir)
-    IvfIndex.appendToIndex(emb.filter(col("vec_id") % 2 === 1)
+    IvfIndex.appendToIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding", "label"), a, dir, batchId = 0L)
     val e = intercept[IllegalStateException] {
       IvfIndex.commitRebuild(spark, dir,
@@ -203,7 +203,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     assert(!new java.io.File(s"$dir/compact.staging").exists())
     assert(IvfIndex.readIndex(spark, dir).count() == emb.count())
     // after the writer quiesces, the rebuild goes through and folds all
-    val b = IvfIndex.rebuildIndex(spark, dir, nlist = 4, iters = 1)
+    val b = IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, dir, nlist = 4, iters = 1)
     assert(IvfIndex.layoutFingerprint(spark, dir).contains(b.fingerprint))
     assert(IvfIndex.readIndex(spark, dir).count() == emb.count())
   }
@@ -211,17 +211,18 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
   test("append racing a rebuild self-heals: slice rolled back, loud throw, reads stay clean") {
     val a = IvfIndex.train(emb, nlist = 4, iters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_append_race").toString
-    IvfBqIndex.writeIndex(emb, a, dir)
+    IvfIndex.writeIndex(IvfBqIndex.Codec, emb, a, dir)
     // flip the layout under the appender's feet (the race's timing: its
     // entry check passed against model a, the rebuild committed before
     // its slice verified) — then drive the verified append with the OLD
     // fingerprint, as the shared helper sees it mid-race
-    val b = IvfBqIndex.rebuildIndex(spark, dir, emb, nlist = 4, iters = 1)
+    val b = IvfIndex.rebuildIndex(IvfBqIndex.Codec, spark, dir, nlist = 4,
+      iters = 1, corpus = Some(emb))
     assert(IvfIndex.layoutFingerprint(spark, dir)
-      .contains(IvfBqIndex.fingerprintOf(b)))
+      .contains(IvfBqIndex.Codec.fingerprint(b)))
     val e = intercept[IllegalStateException] {
       IvfIndex.appendSliceVerified(IvfIndex.assign(emb.limit(2), a),
-        dir, batchId = 99L, IvfBqIndex.fingerprintOf(a))
+        dir, batchId = 99L, IvfBqIndex.Codec.fingerprint(a))
     }
     assert(e.getMessage.contains("append raced a rebuild"))
     // self-healed: the orphan is GONE (not left for readers to trip on)
@@ -233,7 +234,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     val a = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_bq_svc").toString
     val dir = s"$base/bq"
-    IvfBqIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), a, dir)
+    IvfIndex.writeIndex(IvfBqIndex.Codec, emb.filter(col("vec_id") % 2 === 0), a, dir)
 
     // live ingest of the odd half INTO THE CODE LAYOUT (sign codes are
     // assigned and encoded per batch — the bq flavor of VectorIngest)
@@ -244,7 +245,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
       .parquet(staging)
       .writeStream.option("checkpointLocation", s"$base/ckpt")
       .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-        IvfBqIndex.appendToIndex(b, a, dir))
+        IvfIndex.appendToIndex(IvfBqIndex.Codec, b, a, dir))
       .start()
     ingest.processAllAvailable()
     assert(IvfIndex.readIndex(spark, dir).count() == emb.count())
@@ -253,30 +254,32 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     // coordination, the code layout's own rebuild (coarse retrain only —
     // the sign encode is training-free)
     val b = VectorService.coordinatedSwap(Seq(ingest))(
-      IvfBqIndex.rebuildIndex(spark, dir, emb, nlist = 8, iters = 2))
+      IvfIndex.rebuildIndex(IvfBqIndex.Codec, spark, dir, nlist = 8,
+        iters = 2, corpus = Some(emb)))
     assert(IvfIndex.layoutFingerprint(spark, dir)
-      .contains(IvfBqIndex.fingerprintOf(b)))
+      .contains(IvfBqIndex.Codec.fingerprint(b)))
     // drained swap loses nothing
     assert(IvfIndex.readIndex(spark, dir).count() == emb.count())
 
     // stale coarse model: search AND append rejected loudly post-rebuild
     val q = emb.filter(col("vec_id") < 2)
     val eSearch = intercept[IllegalStateException](
-      IvfBqIndex.searchIndex(spark, dir, emb, q, a, k = 5, nprobe = 2, r = 10))
+      IvfIndex.searchIndex(IvfBqIndex.Codec, spark, dir, q, a, k = 5,
+        nprobe = 2, rerank = Some(IvfIndex.Rerank(emb, 10))))
     assert(eSearch.getMessage.contains("fingerprint mismatch"))
     val eAppend = intercept[IllegalStateException](
-      IvfBqIndex.appendToIndex(emb.limit(1), a, dir))
+      IvfIndex.appendToIndex(IvfBqIndex.Codec, emb.limit(1), a, dir))
     assert(eAppend.getMessage.contains("fingerprint mismatch"))
     // the rebuilt model serves the rebuilt layout
-    assert(IvfBqIndex.searchIndex(spark, dir, emb, q, b,
-      k = 5, nprobe = 8, r = 20).count() == 10)
+    assert(IvfIndex.searchIndex(IvfBqIndex.Codec, spark, dir, q, b,
+      k = 5, nprobe = 8, rerank = Some(IvfIndex.Rerank(emb, 20))).count() == 10)
   }
 
   test("coordinated rebuild: drained swap loses nothing; restarted streams carry the new model") {
     val a = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_svc").toString
     val (idx, out) = (s"$base/idx", s"$base/out")
-    IvfIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), a, idx)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") % 2 === 0), a, idx)
 
     // live ingest of the odd half, file-per-batch
     val staging = s"$base/stage"
@@ -284,7 +287,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
       .parquet(staging)
-    val ingest = VectorIngest.start(stream, a, idx, s"$base/ckpt")
+    val ingest = VectorIngest.start(stream, IvfIndex.FloatCodec, a, idx, s"$base/ckpt")
     ingest.processAllAvailable()
 
     // the swap: drain, stop, rebuild — nothing queued is lost
@@ -297,10 +300,12 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     // restarted serving carries the NEW model and answers exactly like a
     // from-scratch probe; the stale model is rejected loudly
     val queries = emb.filter(col("vec_id") < 2)
-    StreamAnnServe.serveBatch(spark, b, idx, out, k = 5, nprobe = 2)(queries, 0L)
+    StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, b, idx,
+      out, k = 5, nprobe = 2)(queries, 0L)
     assert(StreamAnnServe.results(spark, out).count() == 10)
     val e = intercept[IllegalStateException](
-      StreamAnnServe.serveBatch(spark, a, idx, out, k = 5, nprobe = 2)(queries, 1L))
+      StreamAnnServe.serveBatch(spark, IvfIndex.FloatCodec, a, idx,
+        out, k = 5, nprobe = 2)(queries, 1L))
     assert(e.getMessage.contains("fingerprint mismatch"))
 
     // restarted ingest on the SAME checkpoint continues above the folded
@@ -312,7 +317,7 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
       spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
         .parquet(staging),
-      b, idx, s"$base/ckpt")
+      IvfIndex.FloatCodec, b, idx, s"$base/ckpt")
     try resumed.processAllAvailable() finally resumed.stop()
     assert(IvfIndex.cellStats(spark, idx)
       .agg(sum(col("n_vectors"))).head().getLong(0)
@@ -329,14 +334,15 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
     val a = IvfIndex.train(emb, nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("graft_ingoff").toString
     val idx = s"$base/idx"
-    IvfIndex.writeIndex(emb.filter(col("vec_id") < 300), a, idx)
+    IvfIndex.writeIndex(IvfIndex.FloatCodec, emb.filter(col("vec_id") < 300), a, idx)
     def total() = IvfIndex.cellStats(spark, idx)
       .agg(sum(col("n_vectors"))).head().getLong(0)
     val n0 = total()
 
     def ingest(srcDir: String, ckpt: String): Unit = {
       val q = VectorIngest.start(
-        spark.readStream.schema(emb.schema).parquet(srcDir), a, idx, ckpt,
+        spark.readStream.schema(emb.schema).parquet(srcDir), IvfIndex.FloatCodec, a, idx,
+        ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
       try q.awaitTermination() finally q.stop()
     }
@@ -360,13 +366,13 @@ class VectorServiceSpec extends AnyFunSuite with SparkTestBase {
 
     // post-rebuild: the fold commits base@1; a fresh checkpoint must land
     // ABOVE the folded generation (b0 would be invisible + GC-bait)
-    val b = IvfIndex.rebuildIndex(spark, idx, nlist = 8, iters = 2)
+    val b = IvfIndex.rebuildIndex(IvfIndex.FloatCodec, spark, idx, nlist = 8, iters = 2)
     val nAll = total()
     val d3 = emb.filter(col("vec_id") < 50)
       .select((col("vec_id") + 7000L).as("vec_id"), col("embedding"), col("label"))
     d3.write.parquet(s"$base/d3")
     val q3 = VectorIngest.start(
-      spark.readStream.schema(emb.schema).parquet(s"$base/d3"), b, idx,
+      spark.readStream.schema(emb.schema).parquet(s"$base/d3"), IvfIndex.FloatCodec, b, idx,
       s"$base/ckpt3", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     try q3.awaitTermination() finally q3.stop()
     assert(total() == nAll + d3.count(),
